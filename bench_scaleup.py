@@ -72,7 +72,9 @@ def scale_embeddings(src: str, dst: str) -> None:
     span = int(vec_id.max()) + 1
     ids, vecs, labels = [], [], []
     for c in range(COPIES):
-        # deterministic tiny perturbation: roll by c and add c-scaled epsilon
+        # deterministic perturbation: copy c is the vectors rolled by c
+        # positions (copy 0 unchanged), no epsilon, so identical source
+        # vectors stay identical within each copy
         v = np.roll(emb, c, axis=1) if c else emb
         ids.append(vec_id + c * span)
         vecs.append(v)

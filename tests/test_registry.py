@@ -79,18 +79,19 @@ def test_variant_swap_is_config_driven_spark_stage(spark):
         assert got == {f"m-{i}": t for i, t in enumerate(local_texts)}, name
 
 
+def _negated(vocab=None):
+    """A variant that reads differently: the template rows reversed."""
+    from vietnamese_ocr_spark.model.recognizer import build_weights
+
+    w = build_weights(vocab)
+    w["w_out"] = np.ascontiguousarray(w["w_out"][::-1])
+    return w
+
+
 def test_new_variant_is_one_register_call():
     """The extension contract: registering a variant makes it resolvable
     with its own weights, no pipeline edits."""
-
-    @register_encoder("test_negated")
-    def _negated(vocab=None):
-        from vietnamese_ocr_spark.model.recognizer import build_weights
-
-        w = build_weights(vocab)
-        w["w_out"] = np.ascontiguousarray(w["w_out"][::-1])  # distinguishable
-        return w
-
+    register_encoder("test_negated")(_negated)
     try:
         assert "test_negated" in encoder_names()
         w = build_weights_variant("test_negated")
@@ -101,3 +102,41 @@ def test_new_variant_is_one_register_call():
         from vietnamese_ocr_spark.model import registry
 
         registry._ENCODERS.pop("test_negated", None)
+
+
+def test_reused_worker_hydrates_each_runs_variant(spark):
+    """A Python worker reused across runs must recognize with the weights
+    that rode each run's broadcast, not the variant it hydrated first.
+    Spark keys its Python worker pools on the UDF environment, so a fresh
+    environment entry gives these runs a pool of their own; with one
+    partition per run, one worker serves both runs, exactly as on a
+    local[1] session."""
+    pngs = _pngs()
+    register_encoder("test_negated")(_negated)
+    try:
+        weights = {n: build_weights_variant(n) for n in (DEFAULT_ENCODER, "test_negated")}
+    finally:
+        from vietnamese_ocr_spark.model import registry
+
+        registry._ENCODERS.pop("test_negated", None)
+    expected = {}
+    for name, w in weights.items():
+        texts, _h, _ok = recognize_png_batch(pngs, Recognizer(w))
+        expected[name] = {f"m-{i}": t for i, t in enumerate(texts)}
+    assert expected["test_negated"] != expected[DEFAULT_ENCODER]
+
+    from vietnamese_ocr_spark.plans.extract import recognize_media_df
+
+    media = spark.createDataFrame(
+        [(f"m-{i}", bytearray(p), len(p)) for i, p in enumerate(pngs)],
+        "media_ref string, png binary, size_b long",
+    )
+    env = spark.sparkContext.environment
+    env["VIETNAMESE_OCR_TEST_WORKER_POOL"] = "reused-worker"
+    try:
+        for name, w in weights.items():
+            bc = spark.sparkContext.broadcast(weights_to_bytes(w))
+            rec = recognize_media_df(media, bc, n_partitions=1).collect()
+            assert {r["media_ref"]: r["rec_text"] for r in rec} == expected[name], name
+    finally:
+        env.pop("VIETNAMESE_OCR_TEST_WORKER_POOL")

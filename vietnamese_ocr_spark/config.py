@@ -2,8 +2,8 @@
 
 Local defaults are tuned for the sandbox (local[32], 128 GiB); on a real
 cluster the same knobs are what you'd set per-job via spark-submit. AQE is
-on so skewed shuffles re-plan at runtime; Arrow batches are capped so the
-OCR mapInPandas stage holds at most ~few-MB of decoded images per batch.
+on so skewed shuffles re-plan at runtime; Arrow batches are capped to
+amortize the JVM<->Python boundary (see ARROW_MAX_RECORDS).
 """
 
 from __future__ import annotations
@@ -12,12 +12,16 @@ import os
 
 from pyspark.sql import SparkSession
 
-# decoded canvas is 64x256 uint8 = 16 KiB/row inside the UDF; 1024 rows per
-# Arrow batch keeps the Python worker under ~50 MiB working set while
-# amortizing JVM<->Python serialization turns (measured ~15% faster than
-# 256 on the map-only OCR stage; reference batch sizes are 32-200,
-# src/utils/inference.py:44, trainer.py:177 — the model still sub-batches
-# at 32 inside model/pipeline.py).
+# 1024 rows per Arrow batch amortize JVM<->Python serialization turns
+# (measured ~15% faster than 256 on the map-only OCR stage; reference batch
+# sizes are 32-200, src/utils/inference.py:44, trainer.py:177). The batch
+# size no longer sets the worker's working set: model/pipeline.py streams
+# payloads and holds at most 32 decoded 64x256 canvases (16 KiB each).
+# Measured on the extract_media benchmark (local[4], 4-core VM): peak RSS
+# per Python worker ~147 MB (~163 MB when every canvas of a batch was held
+# until recognition); the Python-level allocations of one 1024-payload
+# batch peak at ~2.5 MiB (18.3 MiB before), more when it carries a large
+# multi-line image, whose decoded frame dominates.
 ARROW_MAX_RECORDS = 1024
 
 

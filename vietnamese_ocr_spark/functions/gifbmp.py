@@ -29,6 +29,8 @@ import struct
 
 import numpy as np
 
+from .budget import check_pixels
+
 # -- BMP ----------------------------------------------------------------------
 
 
@@ -85,6 +87,7 @@ def bmp_decode(data: bytes) -> np.ndarray:
         raise ValueError("bad BMP dimensions")
     top_down = h_raw < 0
     h = abs(h_raw)
+    check_pixels(w, h, "BMP")
     stride = (w * (bpp // 8) + 3) // 4 * 4
     if data_off + stride * h > len(data):
         raise ValueError("truncated BMP")
@@ -283,6 +286,7 @@ def gif_decode(data: bytes) -> np.ndarray:
     if data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF")
     sw, sh, packed, bg, _ar = struct.unpack_from("<HHBBB", data, 6)
+    check_pixels(sw, sh, "GIF screen")
     pos = 13
     gct = None
     if packed & 0x80:
@@ -306,6 +310,7 @@ def gif_decode(data: bytes) -> np.ndarray:
             raise ValueError(f"unexpected GIF block 0x{block:02x}")
         left, top, w, h, ipacked = struct.unpack_from("<HHHHB", data, pos)
         pos += 9
+        check_pixels(w, h, "GIF frame")
         pal = gct
         if ipacked & 0x80:
             n = 2 << (ipacked & 0x07)

@@ -28,6 +28,8 @@ import zlib
 
 import numpy as np
 
+from .budget import check_pixels, inflate
+
 TARGET_H = 64  # config/swin_config.yaml:31 img_size [64, 256]
 TARGET_W = 256
 
@@ -266,6 +268,7 @@ def png_decode(data: bytes) -> np.ndarray:
                 raise ValueError(f"unsupported PNG color type {ctype}")
             if interlace not in (0, 1):
                 raise ValueError(f"bad PNG interlace method {interlace}")
+            check_pixels(width, height, "PNG")
         elif tag == b"PLTE":
             plte = np.frombuffer(body, dtype=np.uint8).reshape(-1, 3)
         elif tag == b"IDAT":
@@ -277,7 +280,17 @@ def png_decode(data: bytes) -> np.ndarray:
     channels = _PNG_CHANNELS[ctype]
     sample_b = depth // 8
     bpp = channels * sample_b
-    raw = zlib.decompress(b"".join(idat))
+    if interlace == 0:
+        passes = [(width, height)]
+    else:
+        passes = [
+            ((width - x0 + xs - 1) // xs, (height - y0 + ys - 1) // ys)
+            for x0, xs, y0, ys in _ADAM7
+        ]
+    # the exact filtered size IHDR implies: inflate never produces more
+    raw = inflate(
+        b"".join(idat), sum(ph * (pw * bpp + 1) for pw, ph in passes if pw and ph)
+    )
     if interlace == 0:
         stride = width * bpp + 1
         if len(raw) != height * stride:
@@ -287,9 +300,7 @@ def png_decode(data: bytes) -> np.ndarray:
     else:  # Adam7: seven independently-filtered sub-images, scattered
         out = np.zeros((height, width * bpp), dtype=np.uint8)
         off = 0
-        for x0, xs, y0, ys in _ADAM7:
-            pw = (width - x0 + xs - 1) // xs
-            ph = (height - y0 + ys - 1) // ys
+        for (x0, xs, y0, ys), (pw, ph) in zip(_ADAM7, passes):
             if pw == 0 or ph == 0:
                 continue
             stride = pw * bpp + 1

@@ -29,6 +29,8 @@ import struct
 
 import numpy as np
 
+from .budget import check_pixels
+
 # -- constants (T.81 Annex K) -------------------------------------------------
 
 # zigzag order: ZZ[k] = raster index of the k-th zigzag coefficient
@@ -1053,16 +1055,20 @@ def _scan_dec_baseline(seq, segs, restart_interval, n_comps) -> None:
             size = sym & 0x0F
             if size and ln + size <= 16:
                 # fast path (third pass): magnitude bits are already in
-                # the 16-bit peek — one consume round (see AC-first)
+                # the 16-bit peek — one consume round (see AC-first).
+                # Checks run in the slow path's order, so a corrupt
+                # stream raises the same message on either path.
+                if limit < ln:
+                    raise ValueError("truncated JPEG entropy data")
+                k += sym >> 4
+                if k > 63:
+                    raise ValueError("AC run past end of block")
                 tot = ln + size
                 n -= tot
                 acc &= (1 << n) - 1
                 limit -= tot
                 if limit < 0:
                     raise ValueError("truncated JPEG entropy data")
-                k += sym >> 4
-                if k > 63:
-                    raise ValueError("AC run past end of block")
                 v = (p16 >> (16 - tot)) & ((1 << size) - 1)
                 zz[k] = v if v >= (1 << (size - 1)) else v - (1 << size) + 1
                 k += 1
@@ -1274,15 +1280,17 @@ def _scan_dec_ac_first(blocks, segs, restart_interval, lut, ss, se, al) -> None:
             # code_len + size <= 16, so symbol AND value consume in ONE
             # round — no second refill/mask. Same bits, same order.
             if s and ln + s <= 16:
+                if limit < ln:  # the slow path's check order, as above
+                    raise ValueError("truncated JPEG entropy data")
+                k += r
+                if k > se:
+                    raise ValueError("AC run past spectral band")
                 tot = ln + s
                 n -= tot
                 acc &= (1 << n) - 1
                 limit -= tot
                 if limit < 0:
                     raise ValueError("truncated JPEG entropy data")
-                k += r
-                if k > se:
-                    raise ValueError("AC run past spectral band")
                 v = (p16 >> (16 - tot)) & ((1 << s) - 1)
                 block[k] = (v if v >= (1 << (s - 1)) else v - (1 << s) + 1) << al
                 k += 1
@@ -1546,6 +1554,7 @@ def jpeg_decode(data: bytes) -> np.ndarray:
             prec, fh_, fw_, nc = struct.unpack(">BHHB", body[:6])
             if prec != 8:
                 raise ValueError("only 8-bit precision supported")
+            check_pixels(fw_, fh_, "JPEG")
             comps = []
             for i in range(nc):
                 cid, hv, tq = body[6 + 3 * i : 9 + 3 * i]

@@ -47,6 +47,14 @@ from __future__ import annotations
 import re
 import zlib
 
+from .budget import MAX_PIXELS, check_pixels, inflate
+
+# Decoded-size budget of one Flate or LZW stream whose size nothing
+# declares (content streams, fonts, xref streams): an 8-bit RGBA frame
+# at the pixel cap. Image XObjects get the exact size their dictionary
+# declares instead (pdf_page_images).
+MAX_STREAM_BYTES = 4 * MAX_PIXELS
+
 # -- stream filters (PDF 32000-1 §7.4) ---------------------------------------
 # decode + fixture-encode pairs for the non-Flate filters real generators
 # emit; /LZWDecode reuses the TIFF-variant LZW (functions/tiff.py).
@@ -1340,15 +1348,18 @@ class PdfDocument:
         return raw
 
     @staticmethod
-    def _apply_filter(f: str, raw: bytes) -> bytes:
+    def _apply_filter(f: str, raw: bytes, budget: int = MAX_STREAM_BYTES) -> bytes:
         if f == "/FlateDecode":
-            return zlib.decompress(raw)
+            return inflate(raw, budget)
         if f == "/LZWDecode":
             # PDF LZW (32000-1 §7.4.4) IS the TIFF 6.0 variant:
             # MSB-first codes, early width change (EarlyChange=1)
             from .tiff import _lzw_decode
 
-            return _lzw_decode(raw)
+            out = _lzw_decode(raw, budget + 1)
+            if len(out) > budget:
+                raise ValueError(f"LZW stream exceeds its {budget}-byte budget")
+            return out
         if f == "/ASCIIHexDecode":
             return _asciihex_decode(raw)
         if f == "/ASCII85Decode":
@@ -1384,10 +1395,10 @@ class PdfDocument:
             out.append((f, p))
         return out
 
-    def stream_bytes(self, num: int) -> bytes:
+    def stream_bytes(self, num: int, budget: int = MAX_STREAM_BYTES) -> bytes:
         raw = self.stream_raw(num)
         for f, parms in self._stream_filters(num):
-            raw = self._apply_filter(f, raw)
+            raw = self._apply_filter(f, raw, budget)
             if parms is not None:
                 raw = _apply_predictor(raw, parms)
         return raw
@@ -1653,27 +1664,26 @@ def pdf_page_images(data: bytes) -> list[dict]:
                         raw = _apply_predictor(raw, parms)
                 payload = raw
             else:
-                body = doc.stream_bytes(num)
                 w = int(doc.resolve(d.get("/Width")) or 0)
                 h = int(doc.resolve(d.get("/Height")) or 0)
                 bpc = int(doc.resolve(d.get("/BitsPerComponent")) or 8)
                 cs = doc.resolve(d.get("/ColorSpace"))
                 if bpc != 8 or w <= 0 or h <= 0:
                     raise ValueError(f"unsupported image XObject ({bpc}-bit)")
+                if cs not in ("/DeviceRGB", "/DeviceGray"):
+                    raise ValueError(f"unsupported image colorspace {cs}")
+                check_pixels(w, h, "PDF image")
                 import numpy as np
 
                 from .imaging import png_encode
 
-                if cs == "/DeviceRGB":
-                    if len(body) < w * h * 3:
-                        raise ValueError("truncated image XObject")
-                    arr = np.frombuffer(body[: w * h * 3], np.uint8).reshape(h, w, 3)
-                elif cs == "/DeviceGray":
-                    if len(body) < w * h:
-                        raise ValueError("truncated image XObject")
-                    arr = np.frombuffer(body[: w * h], np.uint8).reshape(h, w)
-                else:
-                    raise ValueError(f"unsupported image colorspace {cs}")
+                shape = (h, w, 3) if cs == "/DeviceRGB" else (h, w)
+                n = int(np.prod(shape))
+                # the declared bitmap plus one PNG-predictor tag per row
+                body = doc.stream_bytes(num, n + h)
+                if len(body) < n:
+                    raise ValueError("truncated image XObject")
+                arr = np.frombuffer(body[:n], np.uint8).reshape(shape)
                 payload = png_encode(arr.copy())
             out.append({"page": pno, "name": name, "payload": payload})
     return out

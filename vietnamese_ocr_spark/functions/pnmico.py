@@ -28,6 +28,8 @@ import struct
 
 import numpy as np
 
+from .budget import check_pixels
+
 # -- PNM ----------------------------------------------------------------------
 
 
@@ -67,6 +69,7 @@ def pnm_decode(data: bytes) -> np.ndarray:
     (w, h), pos = _pnm_tokens(data, 2, 2)
     if w <= 0 or h <= 0:
         raise ValueError("bad PNM dimensions")
+    check_pixels(w, h, "PNM")
     if bitmap:
         maxval = 1
     else:
@@ -198,6 +201,7 @@ def _dib_decode(blob: bytes) -> np.ndarray:
     if w <= 0 or h2 <= 0 or h2 % 2:
         raise ValueError("bad ICO DIB dimensions")
     h = h2 // 2
+    check_pixels(w, h, "ICO")
     pos = 40
     pal = None
     if bpp <= 8:

@@ -27,6 +27,8 @@ import struct
 
 import numpy as np
 
+from .budget import check_pixels
+
 _MAX_W = 12  # LZW code width cap
 _CLEAR, _EOI = 256, 257
 
@@ -319,6 +321,7 @@ def tiff_decode(data: bytes) -> np.ndarray:
         strip_counts = tags[279]
     except KeyError as ex:
         raise ValueError(f"TIFF missing required tag {ex}") from ex
+    check_pixels(w, h, "TIFF")
     spp = tags.get(277, [1])[0]
     bits = tags.get(258, [8] * spp)
     comp = tags.get(259, [1])[0]

@@ -29,6 +29,8 @@ import struct
 
 import numpy as np
 
+from .budget import check_pixels
+
 # Code-length-code symbol order (spec section "Prefix code groups").
 _ORDER = [17, 18, 0, 1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16]
 
@@ -510,14 +512,6 @@ def _decode_image_stream(
     return px, cur_w, transforms
 
 
-def _s8(v: int) -> int:
-    return v - 256 if v >= 128 else v
-
-
-def _ct_delta(t: int, c: int) -> int:
-    return (_s8(t & 0xFF) * _s8(c & 0xFF)) >> 5
-
-
 def _avg2(a: int, b: int) -> int:
     return (
         ((((a >> 24) + (b >> 24)) >> 1) << 24)
@@ -814,6 +808,7 @@ def webp_decode(data: bytes) -> np.ndarray:
     br = _BitReader(payload[1:])
     w = br.read(14) + 1
     h = br.read(14) + 1
+    check_pixels(w, h, "WebP")
     br.read(1)  # alpha hint
     if br.read(3) != 0:
         raise ValueError("unsupported VP8L version")

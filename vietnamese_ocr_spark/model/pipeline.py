@@ -4,11 +4,15 @@ ONE implementation consumed by both the single-process oracle and the Spark
 mapInPandas stage — span equality between them is checked per doc, so the
 pipeline itself must never fork (SURVEY.md §5.1).
 
-Per PNG payload: decode (S3) -> detect line bands (north_star detection
-analog) -> per-band preprocess P1..P4 -> batched greedy recognition (M11)
--> lines joined with '\\n'. Bands from ALL images in the batch are
-recognized in one vectorized pass, so multi-line payloads don't break the
-Arrow-batch amortization.
+Per payload: decode (S3) -> detect line bands (north_star detection analog)
+-> per-band preprocess P1..P4 into a 64x256 canvas. Payloads are streamed
+one at a time: canvases from consecutive payloads queue up, and every time
+MODEL_BATCH of them have built up they are recognized in one vectorized
+pass (M11) and dropped, with one final flush for the remainder. A line's
+sub-batch therefore depends only on its position in the batch's line
+order, never on how lines split across payloads, and at most MODEL_BATCH
+canvases are alive at once however large the Arrow batch is. Each
+payload's lines are joined with '\\n'.
 """
 
 from __future__ import annotations
@@ -32,10 +36,22 @@ def recognize_png_batch(
     Corrupt payloads are QUARANTINED, not fatal: at 10^12 rows a single
     bad byte must never kill the job (the single-process reference would
     just crash). A failed decode yields text '' with decode_ok=False; the
-    lineage table carries the per-partition failure count."""
+    lineage table carries the per-partition failure count. Payloads over
+    the decode budget (functions/budget.py) fail the same way."""
+    ok = [True] * len(pngs)
+    lines: list[list[str]] = [[] for _ in pngs]
+    hist = np.zeros((len(pngs), 10), dtype=np.int64)
     owners: list[int] = []
     canvases: list[np.ndarray] = []
-    ok = [True] * len(pngs)
+
+    def flush() -> None:
+        texts, h = recognizer.recognize(np.stack(canvases))
+        for j, owner in enumerate(owners):
+            lines[owner].append(texts[j])
+            hist[owner] += h[j]
+        owners.clear()
+        canvases.clear()
+
     for i, png in enumerate(pngs):
         try:
             # PNG (gray/RGB/palette/alpha) or baseline JPEG -> BT.601 gray,
@@ -52,17 +68,8 @@ def recognize_png_batch(
             ty0, ty1 = tighten_band(gray, y0, y1)
             owners.append(i)
             canvases.append(preprocess(gray[ty0:ty1]))
-
-    line_texts: list[str] = []
-    hist = np.zeros((len(pngs), 10), dtype=np.int64)
-    for lo in range(0, len(canvases), MODEL_BATCH):
-        batch = np.stack(canvases[lo : lo + MODEL_BATCH])
-        texts, h = recognizer.recognize(batch)
-        line_texts.extend(texts)
-        for j, owner in enumerate(owners[lo : lo + MODEL_BATCH]):
-            hist[owner] += h[j]
-
-    out = [[] for _ in pngs]
-    for owner, text in zip(owners, line_texts):
-        out[owner].append(text)
-    return ["\n".join(lines) for lines in out], hist, ok
+            if len(canvases) == MODEL_BATCH:
+                flush()
+    if canvases:
+        flush()
+    return ["\n".join(ls) for ls in lines], hist, ok

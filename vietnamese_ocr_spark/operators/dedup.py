@@ -380,12 +380,6 @@ MH_A = [
 MH_B = [3, 5, 7, 11, 13, 17, 19, 23, 29, 31, 37, 41, 43, 47, 53, 59]
 
 
-def _mh_base_hash(col):
-    """H(s): the first 28 bits of md5 as a long — shared by every
-    permutation, so the digest is computed once per shingle."""
-    return F.conv(F.substring(F.md5(col), 1, 7), 16, 10).cast("long")
-
-
 # Rolling shingle-hash multipliers: shingle hash = (w0*MH_P2 + w1*MH_P1
 # + w2) mod MH_PRIME over the three word hashes — the polynomial rolling
 # form (Karp-Rabin / winnowing), so each WORD is md5'd once and shingle

@@ -1,22 +1,30 @@
 """The single vectorized OCR stage: mapInPandas over Arrow batches.
 
 This is the engine's only Python-side operator on the media path. Each Arrow
-batch (<= spark.sql.execution.arrow.maxRecordsPerBatch rows of PNG bytes) is
-decoded and preprocessed with NumPy, stacked (legal because P4 canonicalizes
-every image to 64x256, src/utils/transform.py:46-53), and pushed through the
-shared Recognizer in sub-batches of 32 (the reference's inference batch
-size, src/utils/inference.py:44). Never per-row Python at the Spark level.
+batch (<= spark.sql.execution.arrow.maxRecordsPerBatch rows of image bytes)
+is streamed through model/pipeline.py: payloads are decoded and preprocessed
+with NumPy one at a time, and their line canvases are stacked (legal because
+P4 canonicalizes every image to 64x256, src/utils/transform.py:46-53) and
+pushed through the shared Recognizer in sub-batches of 32 (the reference's
+inference batch size, src/utils/inference.py:44) as soon as 32 have built
+up. So the worker holds one sub-batch of canvases, not a whole Arrow
+batch's. Never per-row Python at the Spark level.
 
 Weights travel as ONE broadcast of the .npz bytes and are hydrated into a
 module-level singleton on first use per Python worker — the Spark analog of
 the reference loading its checkpoint once per process
-(src/utils/inference.py:20-28; SURVEY.md §4 X8).
+(src/utils/inference.py:20-28; SURVEY.md §4 X8). The singleton is keyed on
+the broadcast's variant tag and a digest of its bytes, so a reused worker
+that meets other weights re-hydrates instead of serving the old ones.
 """
 
 from __future__ import annotations
 
+import hashlib
+import io
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame
@@ -31,12 +39,25 @@ OCR_OUTPUT_SCHEMA = (
 )
 
 _RECOGNIZER: Recognizer | None = None
+_RECOGNIZER_KEY: tuple[str, str] | None = None  # _weights_key of _RECOGNIZER
+
+
+def _weights_key(blob: bytes) -> tuple[str, str]:
+    """(variant tag, digest of the .npz bytes) of one weights broadcast."""
+    with np.load(io.BytesIO(blob)) as z:
+        variant = str(z["variant"]) if "variant" in z.files else ""
+    return variant, hashlib.blake2b(blob, digest_size=16).hexdigest()
 
 
 def _hydrate(weights_bc) -> Recognizer:
-    global _RECOGNIZER
-    if _RECOGNIZER is None:
-        _RECOGNIZER = Recognizer(weights_from_bytes(weights_bc.value))
+    """This worker's Recognizer for the weights that rode `weights_bc`;
+    a cached one built from other weights is replaced, never kept too."""
+    global _RECOGNIZER, _RECOGNIZER_KEY
+    blob = weights_bc.value
+    key = _weights_key(blob)
+    if _RECOGNIZER is None or _RECOGNIZER_KEY != key:
+        _RECOGNIZER = Recognizer(weights_from_bytes(blob))
+        _RECOGNIZER_KEY = key
     return _RECOGNIZER
 
 

@@ -210,7 +210,11 @@ def lm_bigram_score(docs: DataFrame) -> DataFrame:
     explode over the old when/otherwise([])); and the bigram table is
     persisted because two subtrees consume it (the corpus bigram
     counts and the per-doc terms join) — it was recomputed end to end
-    for each before. Outputs are unchanged (oracle-pinned)."""
+    for each before. Outputs are unchanged (oracle-pinned).
+
+    The persisted bigram frame outlives this call: callers must run
+    `caching.release_persisted()` once they have consumed the result,
+    or a long session accumulates its cached blocks."""
     from collections.abc import Iterator
 
     import pandas as pd

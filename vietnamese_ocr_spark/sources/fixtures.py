@@ -21,7 +21,6 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from ..functions.text import normalize_py
 from ..model.glyphs import build_atlas, render_line, render_multiline
 from ..model.vocab import Vocabulary
 from ..functions.imaging import png_encode
@@ -259,8 +258,3 @@ def generate_corpus(
             if "\n" not in truth:
                 f.write(f"{r}\t{truth}\n")
     return paths
-
-
-def expected_normalized(raw: str) -> str:
-    """Oracle-side normalization of a text span (mirror of Spark path)."""
-    return normalize_py(raw)
