@@ -5,7 +5,7 @@ entry(spark)      — flagship OCR-extraction pipeline on sf0.001 (interleaved
 queries()         — one entry per implemented operator (SURVEY.md §2 +
                     training-data operators); callables take (spark, sf_dir).
 oracle_sql()      — DuckDB-runnable ANSI SQL per query; the OCR pipeline
-                    entries are non-SQL-expressible (mapInPandas recognition)
+                    entries are non-SQL-expressible (mapInArrow recognition)
                     and are intentionally omitted -> rows-only check.
 """
 
@@ -29,7 +29,7 @@ def _ship_package(spark: SparkSession) -> None:
     """Make the package importable INSIDE executors' Python workers.
 
     Driver-side sys.path does not propagate to workers; if the driver's
-    cwd isn't the repo root, every mapInPandas task would die on import.
+    cwd isn't the repo root, every Python UDF task would die on import.
     Ship the same zip `python -m vietnamese_ocr_spark package` builds,
     once per SparkContext (addPyFile distributes + prepends to worker
     sys.path — the local-mode equivalent of spark-submit --py-files).

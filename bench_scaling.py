@@ -46,7 +46,7 @@ def measure(cpus: int, corpus_dir: str) -> dict:
     n_docs = documents.count()  # also warms the JVM/scan
     weights_bc = broadcast_weights(spark)
 
-    # warm the Python workers (pandas/numpy import + weight hydration is a
+    # warm the Python workers (numpy/pyarrow import + weight hydration is a
     # per-worker one-off that amortizes to zero on a long-running cluster)
     warm_docs = documents.limit(512)
     warm, _ = extract_df(spark, warm_docs, media, weights_bc)
@@ -96,11 +96,14 @@ def ensure_skewed_corpus(n_docs: int) -> str:
 def measure_skew(cpus: int, corpus_dir: str, mode: str) -> dict:
     """Per-task wall times of the REAL OCR stage (make_ocr_stage) under a
     chosen pre-stage partitioning. The probe wraps the production stage
-    closure and emits one (part_id, n_media, elapsed) row per task."""
-    import pandas as pd
-
+    closure in mapInArrow, as recognize_media_df runs it, and emits one
+    (part_id, n_media, elapsed) row per task."""
     from vietnamese_ocr_spark.config import get_spark
-    from vietnamese_ocr_spark.operators.ocr_stage import make_ocr_stage, salted_repartition
+    from vietnamese_ocr_spark.operators.ocr_stage import (
+        arrow_column,
+        make_ocr_stage,
+        salted_repartition,
+    )
     from vietnamese_ocr_spark.plans.extract import broadcast_weights
 
     spark = get_spark(f"skew-{cpus}-{mode}", master=f"local[{cpus}]",
@@ -120,21 +123,23 @@ def measure_skew(cpus: int, corpus_dir: str, mode: str) -> dict:
     stage = make_ocr_stage(broadcast_weights(spark))
 
     def probe(batches):
+        import numpy as np
+        import pyarrow as pa
         from pyspark import TaskContext
 
         t0 = time.perf_counter()
         n = 0
         for out in stage(batches):
-            n += len(out)
-        yield pd.DataFrame(
-            [{
-                "part_id": TaskContext.get().partitionId(),
-                "n_media": n,
-                "elapsed": time.perf_counter() - t0,
-            }]
+            n += out.num_rows
+        elapsed = time.perf_counter() - t0
+        yield pa.RecordBatch.from_arrays(
+            [arrow_column(np.array([TaskContext.get().partitionId()], np.int32)),
+             arrow_column(np.array([n], np.int64)),
+             arrow_column(np.array([elapsed]))],
+            names=["part_id", "n_media", "elapsed"],
         )
 
-    probed = balanced.mapInPandas(probe, "part_id int, n_media long, elapsed double")
+    probed = balanced.mapInArrow(probe, "part_id int, n_media long, elapsed double")
     probed.write.mode("overwrite").format("noop").save()  # warm workers/JIT
     t0 = time.perf_counter()
     rows = probed.collect()
@@ -289,7 +294,7 @@ def main() -> int:
         f.write(
             "# BENCH baseline — scaling evidence (north_rule)\n\n"
             "Identical extraction job (read -> explode -> route -> salted\n"
-            "repartition -> mapInPandas OCR -> stitch -> noop sink) on the\n"
+            "repartition -> mapInArrow OCR -> stitch -> noop sink) on the\n"
             f"identical deterministic corpus (seed 42, {n_docs} docs), at three\n"
             "N -> 4N parallelism ladders — the sandbox stand-in for N -> 4N\n"
             "executors. Steady-state walls (2nd iteration; the long-running-\n"

@@ -332,14 +332,29 @@ def _pdf(objs: list[bytes], streams: dict[int, bytes]) -> bytes:
     return bytes(out)
 
 
-def _pdf_content_bomb(bomb: bytes) -> bytes:
+def _pdf_content_bomb(bomb: bytes, filt: bytes = b"/FlateDecode") -> bytes:
     return _pdf([
         b"<< /Type /Catalog /Pages 2 0 R >>",
         b"<< /Type /Pages /Kids [3 0 R] /Count 1 >>",
         b"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
         b"/Resources << >> /Contents 4 0 R >>",
-        b"<< /Length %d /Filter /FlateDecode >>" % len(bomb),
+        b"<< /Length %d /Filter %s >>" % (len(bomb), filt),
     ], {4: bomb})
+
+
+def _runlength_zero_bomb(mib: int) -> bytes:
+    """A RunLength stream decoding to `mib` MiB of zero bytes: every
+    two-byte run (257 - 0x81 = 128 copies) expands 64x."""
+    return b"\x81\x00" * (mib << 13) + b"\x80"
+
+
+def _ascii85_zero_bomb(mib: int, wrap: int = 0) -> bytes:
+    """An ASCII85 stream decoding to `mib` MiB of zero bytes: each 'z'
+    stands for four. Unwrapped, as pdf._ascii85_encode writes zeros; or in
+    lines of `wrap` characters, so the decoder fills up to its budget."""
+    if not wrap:
+        return b"z" * (mib << 18) + b"~>"
+    return (b"z" * wrap + b"\n") * ((mib << 18) // wrap) + b"~>"
 
 
 def _pdf_image_bomb(width: int, height: int, bomb: bytes) -> bytes:
@@ -426,6 +441,18 @@ def test_bombs_and_absurd_dimensions_quarantine_with_bounded_memory(tmp_path):
         # budget, so a bomb costs at most that much, not its full size
         ("pdf_flate_content_bomb", "pdf_text", _pdf_content_bomb(_zlib_zero_bomb(256)),
          MAX_STREAM_BYTES / 2**20 + 16),
+        ("pdf_runlength_content_bomb", "pdf_text",
+         _pdf_content_bomb(_runlength_zero_bomb(80), b"/RunLengthDecode"),
+         MAX_STREAM_BYTES / 2**20 + 16),
+        ("pdf_ascii85_content_bomb", "pdf_text",
+         _pdf_content_bomb(_ascii85_zero_bomb(80), b"/ASCII85Decode"),
+         MAX_STREAM_BYTES / 2**20 + 16),
+        # filled to the budget in 16 KiB steps: the parser's copy of the
+        # 20 MiB raw stream and glibc's heap-to-mmap move of the growing
+        # buffer (up to its 32 MiB dynamic mmap threshold) come on top
+        ("pdf_ascii85_wrapped_content_bomb", "pdf_text",
+         _pdf_content_bomb(_ascii85_zero_bomb(80, wrap=4096), b"/ASCII85Decode"),
+         MAX_STREAM_BYTES / 2**20 + 20 + 32 + 16),
     ]
     path = tmp_path / "fixtures.pkl"
     with open(path, "wb") as f:

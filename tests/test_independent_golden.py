@@ -55,7 +55,7 @@ def test_recognition_matches_literals_single_process():
 
 def test_recognition_matches_literals_distributed(spark):
     """The same literals through the REAL Spark stage (salted repartition
-    + mapInPandas + broadcast weights): distribution must not move a
+    + mapInArrow + broadcast weights): distribution must not move a
     single character."""
     from vietnamese_ocr_spark.plans.extract import broadcast_weights, recognize_media_df
 

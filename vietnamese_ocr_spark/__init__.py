@@ -7,7 +7,7 @@ pipeline over an Iceberg-style table of interleaved text+media documents:
   read documents -> posexplode(spans) -> route by kind
     -> text path:  vectorized boilerplate-strip / normalization (JVM regexp)
     -> media path: join `media` on media_ref, salted repartition by payload
-       size, one mapInPandas OCR stage (decode -> preprocess -> detect ->
+       size, one mapInArrow OCR stage (decode -> preprocess -> detect ->
        greedy recognize, all NumPy over Arrow batches)
   -> union -> groupBy(doc_id) stitch by offset -> write + lineage metrics.
 

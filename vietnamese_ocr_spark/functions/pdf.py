@@ -49,10 +49,11 @@ import zlib
 
 from .budget import MAX_PIXELS, check_pixels, inflate
 
-# Decoded-size budget of one Flate or LZW stream whose size nothing
-# declares (content streams, fonts, xref streams): an 8-bit RGBA frame
-# at the pixel cap. Image XObjects get the exact size their dictionary
-# declares instead (pdf_page_images).
+# Decoded-size budget of one Flate, LZW, ASCII85 or RunLength stream
+# whose size nothing declares (content streams, fonts, xref streams): an
+# 8-bit RGBA frame at the pixel cap. Image XObjects get the exact size
+# their dictionary declares instead (pdf_page_images). ASCIIHex output is
+# at most half its input, so it needs no budget.
 MAX_STREAM_BYTES = 4 * MAX_PIXELS
 
 # -- stream filters (PDF 32000-1 §7.4) ---------------------------------------
@@ -80,7 +81,16 @@ def _asciihex_encode(data: bytes) -> bytes:
     return data.hex().encode("ascii") + b">"
 
 
-def _ascii85_decode(data: bytes) -> bytes:
+_A85_ZEROS = re.compile(rb"z+")
+
+
+def _check_budget(name: str, size: int, budget: int) -> None:
+    """Raises before a filter's output would grow past `budget` bytes."""
+    if size > budget:
+        raise ValueError(f"{name} stream exceeds its {budget}-byte budget")
+
+
+def _ascii85_decode(data: bytes, budget: int = MAX_STREAM_BYTES) -> bytes:
     out = bytearray()
     group: list[int] = []
     i = 0
@@ -88,13 +98,17 @@ def _ascii85_decode(data: bytes) -> bytes:
         c = data[i]
         if data[i : i + 2] == b"~>":
             break
-        i += 1
-        if chr(c).isspace():
-            continue
         if c == ord("z"):
             if group:
                 raise ValueError("ASCII85 'z' inside a group")
-            out += b"\x00\x00\x00\x00"
+            # a run of 'z' (4 zero bytes each) is checked and appended whole
+            run = _A85_ZEROS.match(data, i).end() - i
+            _check_budget("ASCII85", len(out) + 4 * run, budget)
+            out += bytes(4 * run)
+            i += run
+            continue
+        i += 1
+        if chr(c).isspace():
             continue
         if not (ord("!") <= c <= ord("u")):
             raise ValueError(f"bad ASCII85 character {c!r}")
@@ -105,6 +119,7 @@ def _ascii85_decode(data: bytes) -> bytes:
                 n = n * 85 + d
             if n > 0xFFFFFFFF:
                 raise ValueError("ASCII85 group overflow")
+            _check_budget("ASCII85", len(out) + 4, budget)
             out += n.to_bytes(4, "big")
             group = []
     if group:
@@ -114,6 +129,7 @@ def _ascii85_decode(data: bytes) -> bytes:
         n = 0
         for d in group + [84] * (5 - k):  # pad with 'u'
             n = n * 85 + d
+        _check_budget("ASCII85", len(out) + k - 1, budget)
         out += n.to_bytes(4, "big")[: k - 1]
     return bytes(out)
 
@@ -135,7 +151,7 @@ def _ascii85_encode(data: bytes) -> bytes:
     return bytes(out) + b"~>"
 
 
-def _runlength_decode(data: bytes) -> bytes:
+def _runlength_decode(data: bytes, budget: int = MAX_STREAM_BYTES) -> bytes:
     out = bytearray()
     i = 0
     while i < len(data):
@@ -147,11 +163,13 @@ def _runlength_decode(data: bytes) -> bytes:
             chunk = data[i : i + l + 1]
             if len(chunk) != l + 1:
                 raise ValueError("truncated RunLength literal")
+            _check_budget("RunLength", len(out) + l + 1, budget)
             out += chunk
             i += l + 1
         else:
             if i >= len(data):
                 raise ValueError("truncated RunLength run")
+            _check_budget("RunLength", len(out) + 257 - l, budget)
             out += bytes([data[i]]) * (257 - l)
             i += 1
     return bytes(out)
@@ -1357,15 +1375,14 @@ class PdfDocument:
             from .tiff import _lzw_decode
 
             out = _lzw_decode(raw, budget + 1)
-            if len(out) > budget:
-                raise ValueError(f"LZW stream exceeds its {budget}-byte budget")
+            _check_budget("LZW", len(out), budget)
             return out
         if f == "/ASCIIHexDecode":
             return _asciihex_decode(raw)
         if f == "/ASCII85Decode":
-            return _ascii85_decode(raw)
+            return _ascii85_decode(raw, budget)
         if f == "/RunLengthDecode":
-            return _runlength_decode(raw)
+            return _runlength_decode(raw, budget)
         raise ValueError(f"unsupported stream filter {f}")
 
     def _stream_filters(self, num: int) -> list:

@@ -1,7 +1,7 @@
 """The shared per-payload recognition pipeline: decode -> detect -> recognize.
 
 ONE implementation consumed by both the single-process oracle and the Spark
-mapInPandas stage — span equality between them is checked per doc, so the
+mapInArrow stage — span equality between them is checked per doc, so the
 pipeline itself must never fork (SURVEY.md §5.1).
 
 Per payload: decode (S3) -> detect line bands (north_star detection analog)

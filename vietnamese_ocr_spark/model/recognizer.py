@@ -4,7 +4,7 @@ This is the engine's replacement for the reference's CNN/Swin encoder +
 Transformer decoder (src/model/model.py). The reference checkpoint is an
 unresolvable Git-LFS pointer, so — per SURVEY.md §5 — a tiny deterministic
 seeded model IS the semantics contract; the oracle and the Spark
-`mapInPandas` stage run this identical NumPy code on identical `.npz`
+`mapInArrow` stage run this identical NumPy code on identical `.npz`
 weights.
 
 Architecture (uint8 strip storage with float32 accumulators — the stage is

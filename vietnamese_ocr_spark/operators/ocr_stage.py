@@ -1,4 +1,4 @@
-"""The single vectorized OCR stage: mapInPandas over Arrow batches.
+"""The single vectorized OCR stage: mapInArrow over Arrow record batches.
 
 This is the engine's only Python-side operator on the media path. Each Arrow
 batch (<= spark.sql.execution.arrow.maxRecordsPerBatch rows of image bytes)
@@ -9,6 +9,10 @@ pushed through the shared Recognizer in sub-batches of 32 (the reference's
 inference batch size, src/utils/inference.py:44) as soon as 32 have built
 up. So the worker holds one sub-batch of canvases, not a whole Arrow
 batch's. Never per-row Python at the Spark level.
+
+The stage takes and yields pyarrow RecordBatches and assembles its output
+from NumPy buffers, so nothing the worker imports for it loads pandas
+(~40 MB of resident code per Python worker; see config.py).
 
 Weights travel as ONE broadcast of the .npz bytes and are hydrated into a
 module-level singleton on first use per Python worker — the Spark analog of
@@ -25,7 +29,7 @@ import io
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark import TaskContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -37,6 +41,15 @@ OCR_OUTPUT_SCHEMA = (
     "media_ref string, rec_text string, conf_hist array<bigint>, "
     "n_tokens bigint, decode_ok boolean, part_id int"
 )
+# OCR_OUTPUT_SCHEMA as the Arrow schema Spark expects back from the stage
+_ARROW_SCHEMA = pa.schema([
+    ("media_ref", pa.string()),
+    ("rec_text", pa.string()),
+    ("conf_hist", pa.list_(pa.field("element", pa.int64()))),
+    ("n_tokens", pa.int64()),
+    ("decode_ok", pa.bool_()),
+    ("part_id", pa.int32()),
+])
 
 _RECOGNIZER: Recognizer | None = None
 _RECOGNIZER_KEY: tuple[str, str] | None = None  # _weights_key of _RECOGNIZER
@@ -61,28 +74,64 @@ def _hydrate(weights_bc) -> Recognizer:
     return _RECOGNIZER
 
 
-def make_ocr_stage(weights_bc):
-    """Returns the mapInPandas function closure over the weights broadcast."""
+def arrow_column(values: np.ndarray) -> pa.Array:
+    """A null-free Arrow array over a 1-D fixed-width NumPy array's buffer,
+    built without loading pandas (see _ocr_batch)."""
+    values = np.ascontiguousarray(values)
+    return pa.Array.from_buffers(
+        pa.from_numpy_dtype(values.dtype), len(values), [None, pa.py_buffer(values)]
+    )
 
-    def ocr_stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+
+def _ocr_batch(batch: pa.RecordBatch, rec: Recognizer, part_id: int) -> pa.RecordBatch:
+    """One input batch (media_ref, png, ...) -> its OCR_OUTPUT_SCHEMA batch;
+    media_ref passes through as the input's own column."""
+    texts, hist, ok = recognize_png_batch(batch.column("png").to_pylist(), rec)
+    # Assembled from raw buffers: pa.array(), pa.scalar() and
+    # RecordBatch.from_pydict() go through pyarrow's pandas shim, which
+    # imports pandas (pyarrow 16.1, checked in a fresh interpreter);
+    # Array.from_buffers and RecordBatch.from_arrays do not.
+    n, width = hist.shape
+    encoded = [t.encode() for t in texts]
+    text_offsets = np.zeros(n + 1, np.int32)
+    np.cumsum([len(e) for e in encoded], out=text_offsets[1:])
+    rec_text = pa.Array.from_buffers(
+        pa.string(), n, [None, pa.py_buffer(text_offsets), pa.py_buffer(b"".join(encoded))]
+    )
+    hist_offsets = np.arange(0, n * width + 1, width, dtype=np.int32)
+    conf_hist = pa.Array.from_buffers(
+        _ARROW_SCHEMA.field("conf_hist").type, n, [None, pa.py_buffer(hist_offsets)],
+        children=[arrow_column(hist.reshape(-1))],
+    )
+    decode_ok = pa.Array.from_buffers(
+        pa.bool_(), n, [None, pa.py_buffer(np.packbits(ok, bitorder="little"))]
+    )
+    return pa.RecordBatch.from_arrays(
+        [batch.column("media_ref"), rec_text, conf_hist, arrow_column(hist.sum(axis=1)),
+         decode_ok, arrow_column(np.full(n, part_id, np.int32))],
+        schema=_ARROW_SCHEMA,
+    )
+
+
+def make_ocr_stage(weights_bc):
+    """Returns the mapInArrow function closure over the weights broadcast.
+
+    A pandas frame fed to it (a mapInPandas caller) is converted to a
+    RecordBatch on the way in and its output back to pandas on the way out;
+    only such callers pay for, and load, pandas."""
+
+    def ocr_stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         rec = _hydrate(weights_bc)
         ctx = TaskContext.get()
         part_id = ctx.partitionId() if ctx is not None else -1
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if len(batch) == 0:
                 continue
-            refs = pdf["media_ref"].tolist()
-            texts, hist, ok = recognize_png_batch(pdf["png"].tolist(), rec)
-            yield pd.DataFrame(
-                {
-                    "media_ref": refs,
-                    "rec_text": texts,
-                    "conf_hist": hist.tolist(),
-                    "n_tokens": [int(x) for x in hist.sum(axis=1)],
-                    "decode_ok": ok,
-                    "part_id": part_id,
-                }
-            )
+            if isinstance(batch, pa.RecordBatch):
+                yield _ocr_batch(batch, rec, part_id)
+            else:
+                frame = pa.RecordBatch.from_pandas(batch, preserve_index=False)
+                yield _ocr_batch(frame, rec, part_id).to_pandas()
 
     return ocr_stage
 
@@ -100,7 +149,7 @@ def salted_repartition(df: DataFrame, n_partitions: int, weight_col: str = "size
     fed by a skewed key distribution still stalls on its whale partitions.
     We shuffle on (size_bucket, salt) so same-cost rows spread uniformly:
     every partition receives a similar mix of cheap and expensive images,
-    which keeps the mapInPandas stage's task times flat (SURVEY.md §4).
+    which keeps the mapInArrow stage's task times flat (SURVEY.md §4).
 
     The salt space MUST comfortably exceed the partition count: payload
     sizes cluster into very few buckets, so (bucket x salt) is the real key

@@ -7,7 +7,7 @@ Logical plan, all declarative so Catalyst prunes/pushes/reorders freely
                                    └─ kind='media' ─ distinct media_ref     │
                                           │  ⋈ media (pruned cols)          │
                                           │  salted repartition(size,salt)  │
-                                          │  mapInPandas OCR ── 'a' fallback│
+                                          │  mapInArrow OCR ─── 'a' fallback│
                                           └─ join back to media spans ──────┤
                                                                  unionByName
                                                             groupBy(doc_id)
@@ -62,7 +62,7 @@ def recognize_media_df(media: DataFrame, weights_bc, n_partitions: int | None = 
     if n_partitions is None:
         n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))
     balanced = salted_repartition(media, n_partitions)
-    return balanced.mapInPandas(make_ocr_stage(weights_bc), schema=OCR_OUTPUT_SCHEMA)
+    return balanced.mapInArrow(make_ocr_stage(weights_bc), schema=OCR_OUTPUT_SCHEMA)
 
 
 def stitch(spans: DataFrame) -> DataFrame:
