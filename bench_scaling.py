@@ -99,11 +99,8 @@ def measure_skew(cpus: int, corpus_dir: str, mode: str) -> dict:
     closure in mapInArrow, as recognize_media_df runs it, and emits one
     (part_id, n_media, elapsed) row per task."""
     from vietnamese_ocr_spark.config import get_spark
-    from vietnamese_ocr_spark.operators.ocr_stage import (
-        arrow_column,
-        make_ocr_stage,
-        salted_repartition,
-    )
+    from vietnamese_ocr_spark.operators.arrow_batch import arrow_column
+    from vietnamese_ocr_spark.operators.ocr_stage import make_ocr_stage, salted_repartition
     from vietnamese_ocr_spark.plans.extract import broadcast_weights
 
     spark = get_spark(f"skew-{cpus}-{mode}", master=f"local[{cpus}]",

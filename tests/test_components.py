@@ -32,3 +32,20 @@ def test_canonical_docs_keeps_one_per_cluster(spark):
     kept = sorted(r["doc_id"] for r in canonical_docs(pairs, docs).collect())
     # clusters {1,2,3} -> keep 1; {5,6} -> keep 5; 4 and 7 untouched
     assert kept == [1, 4, 5, 7]
+
+
+def test_release_frees_the_components_checkpoints(spark):
+    """Each propagation round is localCheckpoint()ed, which persists an
+    RDD that the frame's unpersist() does not reach; one
+    release_persisted() must free them all once the result is consumed."""
+    from vietnamese_ocr_spark.caching import release_persisted
+
+    jsc = spark.sparkContext._jsc
+    release_persisted()  # drain anything earlier tests left behind
+    before = jsc.getPersistentRDDs().size()
+    pairs = _pairs(spark, [(1, 2), (2, 3), (5, 6)])
+    got = {r["doc_id"]: r["component"] for r in connected_components(pairs).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 5: 5, 6: 5}
+    assert jsc.getPersistentRDDs().size() > before
+    release_persisted()
+    assert jsc.getPersistentRDDs().size() == before

@@ -109,7 +109,7 @@ def test_release_persisted_unpersists_tracked_frames(spark):
     """Operators persist internal frames (shingle sets, band tables);
     release_persisted() must free them so long sessions don't accumulate
     cached blocks (round-2 ADVICE)."""
-    from vietnamese_ocr_spark.operators.dedup import release_persisted
+    from vietnamese_ocr_spark.caching import release_persisted
 
     release_persisted()  # drain anything earlier tests left behind
     d = _docs(spark, [(1, "a b c d e"), (2, "a b c d x")])

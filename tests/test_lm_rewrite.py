@@ -1,4 +1,4 @@
-"""Round-7: lm_bigram_score's mapInPandas bigram extraction must equal
+"""Round-7: lm_bigram_score's mapInArrow bigram extraction must equal
 the add-1 bigram-LM definition on adversarial tokenizations (multi-space
 runs, leading/trailing spaces, 0/1-word docs, NULL text, repeated
 bigrams)."""

@@ -23,7 +23,10 @@ from pyspark.sql import SparkSession
 # pandas (761 modules), ~163 MB when every canvas of a batch was also
 # held until recognition. The Python-level allocations of one
 # 1024-payload batch peak at ~2.5 MiB, more when it carries a large
-# multi-line image, whose decoded frame dominates.
+# multi-line image, whose decoded frame dominates. The curation stages
+# (dedup signatures, the LM bigram pass) run through mapInArrow too: on
+# the curate_queries benchmark (local[3]) a worker peaks at ~114 MB, ~140
+# MB while they were mapInPandas.
 ARROW_MAX_RECORDS = 1024
 
 

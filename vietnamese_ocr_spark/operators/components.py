@@ -16,13 +16,17 @@ diameter) rounds instead of O(diameter) — the difference between 40 and
 a 100-TB graph it is everything. Each round shuffles only (node, label)
 pairs — never document content; localCheckpoint() truncates the growing
 lineage so the plan stays O(1) deep, and the convergence test reads the
-just-checkpointed frame (no recomputation).
+just-checkpointed frame (no recomputation). The checkpoints register with
+caching.py, so the caller frees them with release_persisted() once it
+has consumed the result.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ..caching import checkpoint_tracked
 
 
 def connected_components(
@@ -34,7 +38,7 @@ def connected_components(
     edges = fwd.union(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()
-    edges = edges.localCheckpoint()
+    edges = checkpoint_tracked(edges)
 
     # Round-7: the first propagation round is folded into initialization.
     # With identity labels, round 1's neighbor-label join is just the edge
@@ -45,14 +49,13 @@ def connected_components(
     # the same fixpoint: it only stops on a full no-change round, and the
     # stable point of min-label propagation is the per-component minimum
     # regardless of the intermediate schedule.
-    labels = (
+    labels = checkpoint_tracked(
         edges.groupBy("src")
         .agg(F.min("dst").alias("_m"))
         .select(
             F.col("src").alias("node"),
             F.least("src", "_m").alias("label"),
         )
-        .localCheckpoint()
     )
 
     for _ in range(max_iter):
@@ -77,9 +80,8 @@ def connected_components(
         )
         # carry the previous label through the checkpoint so convergence
         # reads the materialized frame instead of recomputing the round
-        new_labels = (
+        new_labels = checkpoint_tracked(
             jumped.join(labels.withColumnRenamed("label", "old"), "node")
-            .localCheckpoint()
         )
         changed = (
             new_labels.filter(F.col("label") != F.col("old")).limit(1).count()

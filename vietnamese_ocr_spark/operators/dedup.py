@@ -19,6 +19,11 @@ the DuckDB oracles import) — never the engines' internal hash()
 
 from __future__ import annotations
 
+import hashlib
+from collections.abc import Iterator
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -27,6 +32,7 @@ from pyspark.sql import functions as F
 # for consumers that think in dedup terms
 from ..caching import persist_tracked as _persist_tracked  # noqa: E402
 from ..caching import release_persisted  # noqa: E402,F401
+from .arrow_batch import arrow_column, binary_list_column, string_column, take
 
 
 def _words():
@@ -99,19 +105,14 @@ def shingle_digest_docs(docs: DataFrame, shingle_n: int = 3) -> DataFrame:
     md5 of the same UTF-8 shingle bytes == unhex(md5(s)); docs with
     fewer than shingle_n words (or NULL text) get an empty set, exactly
     like add_shingles' otherwise([]) leg."""
-    import hashlib
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     id_type = docs.schema["doc_id"].dataType.simpleString()
     schema = f"doc_id {id_type}, sarr array<binary>"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         md5 = hashlib.md5
-        for pdf in batches:
+        for batch in batches:
             arrs = []
-            for text in pdf["text"].tolist():
+            for text in batch.column("text").to_pylist():
                 if text is None:
                     arrs.append([])
                     continue
@@ -124,9 +125,11 @@ def shingle_digest_docs(docs: DataFrame, shingle_n: int = 3) -> DataFrame:
                     for i in range(len(words) - shingle_n + 1)
                 )
                 arrs.append([md5(s.encode()).digest() for s in seen])
-            yield pd.DataFrame({"doc_id": pdf["doc_id"].tolist(), "sarr": arrs})
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id"), binary_list_column(arrs)], names=["doc_id", "sarr"]
+            )
 
-    return _spread(docs).select("doc_id", "text").mapInPandas(gen, schema)
+    return _spread(docs).select("doc_id", "text").mapInArrow(gen, schema)
 
 
 def exact_dedup_stats(df: DataFrame, col: str) -> DataFrame:
@@ -146,7 +149,7 @@ def minhash_signatures(docs: DataFrame, k: int = 4, shingle_n: int = 3) -> DataF
     this scales linearly with no shuffle at all (the _spread guard only
     fires on under-split test inputs).
 
-    Round-7: computed inside mapInPandas (guide §4.2 — Catalyst's
+    Round-7: computed inside mapInArrow (guide §4.2 — Catalyst's
     higher-order transform/array_min chain is CodegenFallback, i.e.
     interpreted per element; hashing the shingles in the Python worker
     with hashlib is several times faster and the boundary carries only
@@ -154,20 +157,15 @@ def minhash_signatures(docs: DataFrame, k: int = 4, shingle_n: int = 3) -> DataF
     UTF-8 bytes, lexicographic min == array_min on strings, and the
     <shingle_n-words fallback hashes "j:text" exactly as before.
     """
-    import hashlib
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     id_type = docs.schema["doc_id"].dataType.simpleString()
     schema = ", ".join([f"doc_id {id_type}"] + [f"mh{j} string" for j in range(k)])
+    names = ["doc_id"] + [f"mh{j}" for j in range(k)]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         md5 = hashlib.md5
-        for pdf in batches:
-            out: dict[str, list] = {"doc_id": pdf["doc_id"].tolist()}
+        for batch in batches:
             cols: list[list] = [[] for _ in range(k)]
-            for text in pdf["text"].tolist():
+            for text in batch.column("text").to_pylist():
                 if text is None:
                     for j in range(k):
                         cols[j].append(None)
@@ -186,11 +184,11 @@ def minhash_signatures(docs: DataFrame, k: int = 4, shingle_n: int = 3) -> DataF
                 else:
                     for j in range(k):
                         cols[j].append(md5(f"{j}:{text}".encode()).hexdigest())
-            for j in range(k):
-                out[f"mh{j}"] = cols[j]
-            yield pd.DataFrame(out)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id")] + [string_column(c) for c in cols], names=names
+            )
 
-    return _spread(docs).select("doc_id", "text").mapInPandas(gen, schema)
+    return _spread(docs).select("doc_id", "text").mapInArrow(gen, schema)
 
 
 def minhash_band_buckets(docs: DataFrame, k: int = 4, band_chars: int = 2) -> DataFrame:
@@ -221,28 +219,22 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     """
     # Round-7 second pass: the per-bit aggregate() folds were still
     # interpreted (CodegenFallback) at bits x words ops per doc; the
-    # same reduction runs vectorized in NumPy inside mapInPandas
+    # same reduction runs vectorized in NumPy inside mapInArrow
     # (guide §4.2). Word hash = first 32 bits of md5 big-endian ==
     # conv(substring(md5_hex, 1, 8), 16, 10); bit b of the simhash is
     # set iff 2*(#words with bit b set) > #words — identical values.
     # explode() dropped docs with NULL text; the None-skip keeps that
     # exact contract.
-    import hashlib
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     id_type = docs.schema["doc_id"].dataType.simpleString()
     schema = f"doc_id {id_type}, simhash bigint"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         md5 = hashlib.md5
         weights = (1 << np.arange(bits, dtype=np.int64))
-        for pdf in batches:
-            ids = []
+        for batch in batches:
+            rows = []
             sims = []
-            for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
+            for row, text in enumerate(batch.column("text").to_pylist()):
                 if text is None:
                     continue
                 words = text.split(" ")
@@ -255,11 +247,14 @@ def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
                     count=len(words),
                 )
                 c = ((wh[:, None] >> np.arange(bits)) & 1).sum(axis=0)
-                ids.append(doc_id)
-                sims.append(int(((2 * c > len(words)) * weights).sum()))
-            yield pd.DataFrame({"doc_id": ids, "simhash": pd.array(sims, dtype="Int64")})
+                rows.append(row)
+                sims.append(((2 * c > len(words)) * weights).sum())
+            yield pa.RecordBatch.from_arrays(
+                [take(batch.column("doc_id"), rows), arrow_column(np.array(sims, np.int64))],
+                names=["doc_id", "simhash"],
+            )
 
-    return _spread(docs).select("doc_id", "text").mapInPandas(gen, schema)
+    return _spread(docs).select("doc_id", "text").mapInArrow(gen, schema)
 
 
 def jaccard_candidates(
@@ -400,7 +395,7 @@ def minhash_signatures_fast(
     and k multiply-add-mod permutations. Docs with < shingle_n words
     fall back to the full-text hash. Map-only: zero shuffle.
 
-    Round-7: the arithmetic runs vectorized in NumPy inside mapInPandas
+    Round-7: the arithmetic runs vectorized in NumPy inside mapInArrow
     (guide §4.2) — the previous Column-algebra form was a chain of
     interpreted higher-order functions (CodegenFallback) costing ~2ms
     per doc; int64 never overflows (words are 28-bit, multipliers
@@ -410,25 +405,21 @@ def minhash_signatures_fast(
         raise ValueError(f"k={k} exceeds the {len(MH_A)} fixed permutations")
     if shingle_n != 3:
         raise ValueError("rolling combine is unrolled for shingle_n=3")
-    import hashlib
-    from collections.abc import Iterator
-
-    import numpy as np
-    import pandas as pd
-
     id_type = docs.schema["doc_id"].dataType.simpleString()
     schema = ", ".join([f"doc_id {id_type}"] + [f"mh{j} bigint" for j in range(k)])
+    names = ["doc_id"] + [f"mh{j}" for j in range(k)]
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         md5 = hashlib.md5
         A = np.array(MH_A[:k], dtype=np.int64)[:, None]
         B = np.array(MH_B[:k], dtype=np.int64)[:, None]
-        for pdf in batches:
-            cols = [[] for _ in range(k)]
-            for text in pdf["text"].tolist():
+        for batch in batches:
+            texts = batch.column("text").to_pylist()
+            sigs = np.zeros((k, len(texts)), np.int64)
+            valid = np.ones(len(texts), bool)  # NULL text -> NULL signature
+            for row, text in enumerate(texts):
                 if text is None:
-                    for j in range(k):
-                        cols[j].append(None)
+                    valid[row] = False
                     continue
                 words = text.split(" ")
                 if len(words) >= 3:
@@ -445,14 +436,13 @@ def minhash_signatures_fast(
                 else:
                     ht = int.from_bytes(md5(text.encode()).digest()[:4], "big") >> 4
                     mins = (A[:, 0] * ht + B[:, 0]) % MH_PRIME
-                for j in range(k):
-                    cols[j].append(int(mins[j]))
-            out = {"doc_id": pdf["doc_id"].tolist()}
-            for j in range(k):
-                out[f"mh{j}"] = pd.array(cols[j], dtype="Int64")
-            yield pd.DataFrame(out)
+                sigs[:, row] = mins
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id")] + [arrow_column(sig, valid) for sig in sigs],
+                names=names,
+            )
 
-    return _spread(docs).select("doc_id", "text").mapInPandas(gen, schema)
+    return _spread(docs).select("doc_id", "text").mapInArrow(gen, schema)
 
 
 def minhash_candidate_pairs(

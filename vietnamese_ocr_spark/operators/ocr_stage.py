@@ -11,8 +11,9 @@ up. So the worker holds one sub-batch of canvases, not a whole Arrow
 batch's. Never per-row Python at the Spark level.
 
 The stage takes and yields pyarrow RecordBatches and assembles its output
-from NumPy buffers, so nothing the worker imports for it loads pandas
-(~40 MB of resident code per Python worker; see config.py).
+from NumPy buffers (operators/arrow_batch.py), so nothing the worker imports
+for it loads pandas (~40 MB of resident code per Python worker; see
+config.py).
 
 Weights travel as ONE broadcast of the .npz bytes and are hydrated into a
 module-level singleton on first use per Python worker — the Spark analog of
@@ -36,6 +37,7 @@ from pyspark.sql import functions as F
 
 from ..model.pipeline import recognize_png_batch
 from ..model.recognizer import Recognizer, weights_from_bytes
+from .arrow_batch import arrow_column, string_column
 
 OCR_OUTPUT_SCHEMA = (
     "media_ref string, rec_text string, conf_hist array<bigint>, "
@@ -74,30 +76,11 @@ def _hydrate(weights_bc) -> Recognizer:
     return _RECOGNIZER
 
 
-def arrow_column(values: np.ndarray) -> pa.Array:
-    """A null-free Arrow array over a 1-D fixed-width NumPy array's buffer,
-    built without loading pandas (see _ocr_batch)."""
-    values = np.ascontiguousarray(values)
-    return pa.Array.from_buffers(
-        pa.from_numpy_dtype(values.dtype), len(values), [None, pa.py_buffer(values)]
-    )
-
-
 def _ocr_batch(batch: pa.RecordBatch, rec: Recognizer, part_id: int) -> pa.RecordBatch:
     """One input batch (media_ref, png, ...) -> its OCR_OUTPUT_SCHEMA batch;
     media_ref passes through as the input's own column."""
     texts, hist, ok = recognize_png_batch(batch.column("png").to_pylist(), rec)
-    # Assembled from raw buffers: pa.array(), pa.scalar() and
-    # RecordBatch.from_pydict() go through pyarrow's pandas shim, which
-    # imports pandas (pyarrow 16.1, checked in a fresh interpreter);
-    # Array.from_buffers and RecordBatch.from_arrays do not.
     n, width = hist.shape
-    encoded = [t.encode() for t in texts]
-    text_offsets = np.zeros(n + 1, np.int32)
-    np.cumsum([len(e) for e in encoded], out=text_offsets[1:])
-    rec_text = pa.Array.from_buffers(
-        pa.string(), n, [None, pa.py_buffer(text_offsets), pa.py_buffer(b"".join(encoded))]
-    )
     hist_offsets = np.arange(0, n * width + 1, width, dtype=np.int32)
     conf_hist = pa.Array.from_buffers(
         _ARROW_SCHEMA.field("conf_hist").type, n, [None, pa.py_buffer(hist_offsets)],
@@ -107,8 +90,8 @@ def _ocr_batch(batch: pa.RecordBatch, rec: Recognizer, part_id: int) -> pa.Recor
         pa.bool_(), n, [None, pa.py_buffer(np.packbits(ok, bitorder="little"))]
     )
     return pa.RecordBatch.from_arrays(
-        [batch.column("media_ref"), rec_text, conf_hist, arrow_column(hist.sum(axis=1)),
-         decode_ok, arrow_column(np.full(n, part_id, np.int32))],
+        [batch.column("media_ref"), string_column(texts), conf_hist,
+         arrow_column(hist.sum(axis=1)), decode_ok, arrow_column(np.full(n, part_id, np.int32))],
         schema=_ARROW_SCHEMA,
     )
 

@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..caching import checkpoint_tracked
+
 # round-7: the packed-codebook assignment is a CPU-heavy projection
 # (aggregate/zip_with higher-order functions are CodegenFallback —
 # interpreted — so k x d fused multiply-adds per row cost real CPU), and
@@ -279,8 +281,9 @@ def kmeans_codebook(embeddings: DataFrame, k: int = 8, iters: int = 2) -> DataFr
     one map-side-combined groupBy for the centroid update; nothing
     driver-side, no collect. Centroid coordinates round to 6 dp per round
     so both engines quantize float noise identically. localCheckpoint
-    truncates the per-round lineage. At 10^12 scale you'd train on a
-    sample table; the plan is unchanged."""
+    truncates the per-round lineage (registered with caching.py, so
+    release_persisted() frees it once the codebook is consumed). At
+    10^12 scale you'd train on a sample table; the plan is unchanged."""
     embeddings = _respread(embeddings)
     dims = _explode_dims(embeddings)
     cent = dims.filter(F.col("vec_id") < k).select(
@@ -288,11 +291,10 @@ def kmeans_codebook(embeddings: DataFrame, k: int = 8, iters: int = 2) -> DataFr
     )
     for _ in range(iters):
         assign = _assign(embeddings, _pack_centroids(cent))
-        cent = (
+        cent = checkpoint_tracked(
             dims.join(assign, "vec_id")
             .groupBy(F.col("cluster").alias("cid"), F.col("pos"))
             .agg(F.round(F.avg("v"), 6).alias("cv"))
-            .localCheckpoint()
         )
     return cent
 

@@ -1,13 +1,22 @@
 """Text-analysis operators for large-scale training-data pipelines.
 
-All pure Column expressions (JVM-side, whole-stage codegen) — no UDFs.
-Each has a 1:1 ANSI-SQL oracle in plans/queries.py checked by DuckDB.
+Column expressions (JVM-side, whole-stage codegen) wherever Catalyst can
+say it. Two stages run Python over Arrow batches in mapInArrow instead
+(never per-row UDFs): dom_main_content_stage, because a DOM tree is not a
+Column expression, and the bigram pass of lm_bigram_score, because the
+equivalent higher-order transform is interpreted per element. Each
+operator has a 1:1 ANSI-SQL oracle in plans/queries.py checked by DuckDB.
 """
 
 from __future__ import annotations
 
+from collections.abc import Iterator
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .arrow_batch import string_column, take
 
 
 def word_count(text: Column) -> Column:
@@ -165,23 +174,20 @@ def dom_main_content_stage(docs: DataFrame) -> DataFrame:
     elements by own-text length and subtree link density.
 
     A DOM cannot be expressed in Catalyst expressions, so this is the
-    sanctioned Arrow-batched mapInPandas escape hatch (never per-row
+    sanctioned Arrow-batched mapInArrow escape hatch (never per-row
     Python UDFs). Prefer the JVM-side extract_main_content for flat
     markup; reach for this stage when nesting matters."""
-    import pandas as pd
 
-    def stage(batches):
+    def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..functions.dom import dom_main_content
 
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "main_text": [dom_main_content(t) for t in pdf["text"]],
-                }
+        for batch in batches:
+            main = [dom_main_content(t) for t in batch.column("text").to_pylist()]
+            yield pa.RecordBatch.from_arrays(
+                [batch.column("doc_id"), string_column(main)], names=["doc_id", "main_text"]
             )
 
-    return docs.select("doc_id", "text").mapInPandas(
+    return docs.select("doc_id", "text").mapInArrow(
         stage, "doc_id string, main_text string"
     )
 
@@ -203,7 +209,7 @@ def lm_bigram_score(docs: DataFrame) -> DataFrame:
     §2.4/§4.2): the input is re-spread before the CPU-heavy
     projections (a single-row-group bench table otherwise serializes
     them on one core; no-op on real many-split tables); the bigram
-    occurrence rows come from one Python pass in mapInPandas instead
+    occurrence rows come from one Python pass in mapInArrow instead
     of the interpreted higher-order add_shingles transform (identical
     strings: ws[i] + " " + ws[i+1] over the same single-space split,
     docs with <2 words or NULL text contribute nothing, exactly like
@@ -215,10 +221,6 @@ def lm_bigram_score(docs: DataFrame) -> DataFrame:
     The persisted bigram frame outlives this call: callers must run
     `caching.release_persisted()` once they have consumed the result,
     or a long session accumulates its cached blocks."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-
     from .dedup import _persist_tracked, _spread
 
     docs = _spread(docs)
@@ -233,22 +235,24 @@ def lm_bigram_score(docs: DataFrame) -> DataFrame:
     id_type = docs.schema["doc_id"].dataType.simpleString()
     bi_schema = f"doc_id {id_type}, s string, w1 string"
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids: list = []
+    def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            rows: list[int] = []
             ss: list[str] = []
             w1s: list[str] = []
-            for doc_id, text in zip(pdf["doc_id"].tolist(), pdf["text"].tolist()):
+            for row, text in enumerate(batch.column("text").to_pylist()):
                 if text is None:
                     continue
                 ws = text.split(" ")
-                for i in range(len(ws) - 1):
-                    ids.append(doc_id)
-                    ss.append(ws[i] + " " + ws[i + 1])
-                    w1s.append(ws[i])
-            yield pd.DataFrame({"doc_id": ids, "s": ss, "w1": w1s})
+                rows += [row] * (len(ws) - 1)
+                ss += map(" ".join, zip(ws, ws[1:]))
+                w1s += ws[:-1]
+            yield pa.RecordBatch.from_arrays(
+                [take(batch.column("doc_id"), rows), string_column(ss), string_column(w1s)],
+                names=["doc_id", "s", "w1"],
+            )
 
-    bi = _persist_tracked(docs.select("doc_id", "text").mapInPandas(gen, bi_schema))
+    bi = _persist_tracked(docs.select("doc_id", "text").mapInArrow(gen, bi_schema))
     bc = bi.groupBy("s").agg(F.count("*").alias("c12"))
     terms = (
         bi.join(bc, "s")
