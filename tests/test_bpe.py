@@ -174,3 +174,24 @@ def test_fast_trainer_1k_merges_on_50k_word_vocab():
     wall = time.monotonic() - t0
     assert len(merges) == 1000, len(merges)
     assert wall < 20.0, wall
+
+
+def test_release_frees_the_training_checkpoints(spark):
+    """bpe_train checkpoints its word table once per round; the returned
+    table reads from them until caching.release_persisted() frees them
+    all."""
+    from vietnamese_ocr_spark.caching import release_persisted
+
+    jsc = spark.sparkContext._jsc
+    release_persisted()  # drain anything earlier tests left behind
+    before = jsc.getPersistentRDDs().size()
+    docs = spark.createDataFrame(
+        [("d0", "low lower lowest"), ("d1", "low lower newer")],
+        "doc_id string, text string",
+    )
+    merges, table = bpe_train(docs, num_merges=3)
+    assert len(merges) == 3
+    assert bpe_vocab(table).count() > 0
+    assert jsc.getPersistentRDDs().size() > before
+    release_persisted()
+    assert jsc.getPersistentRDDs().size() == before

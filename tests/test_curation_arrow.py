@@ -96,7 +96,8 @@ EXPECTED = {
     ),
     "dom_main_content_stage": (
         "struct<doc_id:string,main_text:string>",
-        [("2", ""), ("3", ""), ("4", ""), ("5", ""), ("6", "tiếng việt có dấu thanh điệu"),
+        [("1", None), ("2", ""), ("3", ""), ("4", ""), ("5", ""),
+         ("6", "tiếng việt có dấu thanh điệu"),
          ("7", ""), ("8", "Đây là nội dung chính của bài viết tiếng Việt.")],
     ),
     "lm_bigram_score": (
@@ -109,10 +110,8 @@ EXPECTED = {
 
 def _stages(docs):
     """The six converted stages over `docs` (doc_id bigint, text string).
-    The DOM stage keys on string doc_ids and, as it always has, fails on
-    NULL text, so it gets the non-NULL rows with their ids as strings."""
-    dom_in = docs.filter("text is not null").selectExpr(
-        "cast(doc_id as string) doc_id", "text")
+    The DOM stage keys on string doc_ids, so it gets the ids as strings."""
+    dom_in = docs.selectExpr("cast(doc_id as string) doc_id", "text")
     return {
         "shingle_digest_docs": dedup.shingle_digest_docs(docs),
         "minhash_signatures": dedup.minhash_signatures(docs),

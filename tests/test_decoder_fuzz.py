@@ -371,6 +371,20 @@ def _pdf_image_bomb(width: int, height: int, bomb: bytes) -> bytes:
     ], {4: content, 5: bomb})
 
 
+def _jpeg_dht_flood(tables: int) -> bytes:
+    """SOI, `tables` DHT segments each holding a distinct one-code table
+    (a 1-bit code for symbol i, spread over the 8 legal class/destination
+    slots), then EOI: no frame, so it quarantines, but every table is
+    parsed and built on the way."""
+    import struct
+
+    out = bytearray(b"\xff\xd8")
+    for i in range(tables):
+        body = bytes([(i & 4) << 2 | (i & 3), 1] + [0] * 15 + [i & 0xFF])
+        out += b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
+    return bytes(out + b"\xff\xd9")
+
+
 _HOSTILE_PROBE = r"""
 import json, pickle, sys
 import numpy as np
@@ -403,8 +417,10 @@ with open(sys.argv[1], "rb") as f:
 img = np.full((32, 96), 255, np.uint8)
 img[8:24, 8:88] = 0
 from vietnamese_ocr_spark.functions.gifbmp import bmp_encode, gif_encode
+from vietnamese_ocr_spark.functions.jpeg import jpeg_encode
 from vietnamese_ocr_spark.functions.tiff import tiff_encode
-for warm in (png_encode(img), tiff_encode(img, compression="lzw"), gif_encode(img), bmp_encode(img)):
+for warm in (png_encode(img), tiff_encode(img, compression="lzw"), gif_encode(img), bmp_encode(img),
+             jpeg_encode(img, 90)):
     assert recognize_png_batch([warm], rec)[2] == [True]
 assert pdf_line_rows("w", pdf_encode([[(72, 700, 10, "warm up")]]))[0]["decode_ok"]
 assert scanned_ocr_rows("w", pdf_encode_scanned([img], raw_flate=True), rec)[0]["rec_text"] is not None
@@ -436,6 +452,9 @@ def test_bombs_and_absurd_dimensions_quarantine_with_bounded_memory(tmp_path):
         ("gif_absurd_dims", "image",
          _gif_gray(65535, 65535, _lzw_zero_bomb(18, msb_first=False)), 16),
         ("bmp_absurd_dims", "image", _bmp_header_only(65535, 65535), 16),
+        # distinct Huffman tables are cached per process: the cache's
+        # fixed bound, not the payload's table count, caps the growth
+        ("jpeg_dht_flood", "image", _jpeg_dht_flood(100), 16),
         ("pdf_flate_image_bomb", "pdf_scan", _pdf_image_bomb(100, 100, bomb), 16),
         # nothing declares a content stream's size: it gets the fixed
         # budget, so a bomb costs at most that much, not its full size

@@ -6,9 +6,12 @@ real JPEG round-trip."""
 
 from __future__ import annotations
 
+import struct
+
 import numpy as np
 import pytest
 
+from vietnamese_ocr_spark.functions import jpeg
 from vietnamese_ocr_spark.functions.jpeg import jpeg_decode, jpeg_encode
 
 
@@ -161,3 +164,171 @@ def test_progressive_through_decode_image_seam():
 def test_progressive_rejects_restart_interval():
     with pytest.raises(ValueError, match="restart"):
         jpeg_encode(_gradient(), 80, restart_interval=4, progressive=True)
+
+
+# -- decode pins, Huffman tables, coefficient stores ----------------------------
+
+def _pinned_fixtures() -> dict[str, bytes]:
+    g = _gradient(64, 128)
+    c = np.stack([g, np.roll(g, 7, axis=1), 255 - g], axis=-1)
+    noise = np.random.default_rng(12).integers(0, 256, (33, 47, 3), dtype=np.uint8)
+    return {
+        "baseline_gray": jpeg_encode(g, 90),
+        "baseline_444": jpeg_encode(c, 90, subsample="444"),
+        "baseline_420": jpeg_encode(c, 90, subsample="420"),
+        "restart_markers": jpeg_encode(c, 90, subsample="420", restart_interval=3),
+        "progressive_gray": jpeg_encode(g, 85, progressive=True),
+        "progressive_420": jpeg_encode(noise, 100, subsample="420", progressive=True),
+    }
+
+
+def test_decodes_are_pinned_byte_equal():
+    """sha256 prefixes of the decoded pixels, taken from the decoder that
+    kept int64 coefficients and numpy-built Huffman tables: the int16
+    stores and the slice-built tables change no output byte."""
+    import hashlib
+
+    want = {
+        "baseline_gray": "fdd0aea3ad8f0e88",
+        "baseline_444": "e030433e97227146",
+        "baseline_420": "d95b80cbf1663916",
+        "restart_markers": "d95b80cbf1663916",
+        "progressive_gray": "2420399530feb7b7",
+        "progressive_420": "81623eddad4032b8",
+    }
+    got = {name: hashlib.sha256(jpeg_decode(data).tobytes()).hexdigest()[:16]
+           for name, data in _pinned_fixtures().items()}
+    assert got == want
+
+
+_TABLES = {
+    "dc_luma": jpeg._DC_LUMA,
+    "ac_luma": jpeg._AC_LUMA,
+    "dc_chroma": jpeg._DC_CHROMA,
+    "ac_chroma": jpeg._AC_CHROMA,
+    "prog_ac": jpeg._PROG_AC,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_TABLES))
+def test_decode_table_maps_every_prefix_to_its_canonical_code(name):
+    """Every 16-bit prefix of a canonical code maps to (len << 8) | sym,
+    every other prefix to 0; the codes come from the encoder's own
+    canonical assignment (T.81 C.2). Each code's run shares one int
+    object, so a table holds at most one distinct int per code."""
+    bits, vals = _TABLES[name]
+    lut = jpeg._decode_table(bytes(bits), bytes(vals))
+    assert type(lut) is list and len(lut) == 1 << 16
+    prefixes = np.arange(1 << 16)
+    want = np.zeros(1 << 16, dtype=np.int64)
+    for sym, (code, length) in jpeg._canonical_codes(bits, vals).items():
+        hit = (prefixes >> (16 - length)) == code
+        assert not want[hit].any()  # prefix-free
+        want[hit] = (length << 8) | sym
+    assert lut == want.tolist()
+    assert len({id(e) for e in lut if e}) <= len(vals)
+
+
+def test_decode_table_cache_is_bounded():
+    """More distinct tables than the cache holds: each still decodes, and
+    the cache never holds more than its fixed bound."""
+    cap = jpeg._LUT_CACHE_SIZE
+    assert jpeg._decode_table.cache_info().maxsize == cap
+    for sym in range(3 * cap):
+        lut = jpeg._decode_table(bytes([1] + [0] * 15), bytes([sym]))
+        assert lut[0] == lut[0x7FFF] == (1 << 8) | sym and lut[0x8000] == 0
+        assert jpeg._decode_table.cache_info().currsize <= cap
+
+
+def _segment(marker: int, body: bytes) -> bytes:
+    return bytes([0xFF, marker]) + struct.pack(">H", len(body) + 2) + body
+
+
+@pytest.mark.parametrize("tc_th", [0x20, 0x04, 0xF3])
+def test_dht_outside_the_eight_table_slots_is_rejected(tc_th):
+    """T.81 allows table classes 0 (DC) and 1 (AC) and destinations 0-3,
+    so a decode holds at most 8 tables; any other slot is rejected."""
+    data = b"\xff\xd8" + _segment(0xC4, bytes([tc_th, 1] + [0] * 15 + [0])) + b"\xff\xd9"
+    with pytest.raises(ValueError, match="class/destination"):
+        jpeg_decode(data)
+
+
+def test_dc_outside_int16_is_rejected():
+    """A DC table whose symbol asks for 16 magnitude bits decodes to a
+    coefficient of 65535, which the int16 store cannot hold: rejected,
+    not wrapped."""
+    one_code = lambda sym: bytes([1] + [0] * 15 + [sym])  # noqa: E731
+    data = (
+        b"\xff\xd8"
+        + _segment(0xDB, bytes(1 + 64))
+        + _segment(0xC0, struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0]))
+        + _segment(0xC4, bytes([0x00]) + one_code(16) + bytes([0x10]) + one_code(0))
+        + _segment(0xDA, bytes([1, 1, 0x00, 0, 63, 0]))
+        # DC code '0', 16 one-bits of magnitude, AC EOB '0', 1-bit padding;
+        # the 0xFF data byte is stuffed
+        + b"\x7f\xff\x00\xbf"
+        + b"\xff\xd9"
+    )
+    with pytest.raises(ValueError, match="int16"):
+        jpeg_decode(data)
+
+
+def test_header_only_frame_at_the_pixel_cap_reserves_int16_stores():
+    """A 4096x4096 3-component SOF2 with no scan reserves its coefficient
+    stores before failing: 2 bytes per coefficient (~96 MiB), not the 8
+    an int64 store took (~384 MiB). np.zeros is calloc'd, so the test
+    touches none of it."""
+    import tracemalloc
+
+    from vietnamese_ocr_spark.functions.imaging import decode_image
+
+    sof = struct.pack(">BHHB", 8, 4096, 4096, 3) + bytes(
+        [1, 0x11, 0, 2, 0x11, 0, 3, 0x11, 0])
+    data = b"\xff\xd8" + _segment(0xC2, sof) + b"\xff\xd9"
+    tracemalloc.start()
+    try:
+        with pytest.raises(ValueError, match="no frame/scan"):
+            decode_image(data)
+        _cur, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 3 * 4096 * 4096 * 2 + (1 << 20), peak
+
+
+def _entropy(bits: str) -> bytes:
+    """A bit string as entropy-coded bytes: 1-padded, 0xFF stuffed."""
+    bits += "1" * (-len(bits) % 8)
+    raw = int(bits, 2).to_bytes(len(bits) // 8, "big")
+    return raw.replace(b"\xff", b"\xff\x00")
+
+
+def _progressive_gray_8x8(scans: list[tuple[int, int, int, list[int], list[int], str]]) -> bytes:
+    """One-block progressive gray JPEG; each scan is (Ss, Se, Ah<<4|Al,
+    BITS, HUFFVAL, entropy bit string), its table sent just before it
+    (class 0 for the DC scan, 1 otherwise)."""
+    out = (b"\xff\xd8" + _segment(0xDB, bytes([0]) + bytes([1] * 64))
+           + _segment(0xC2, struct.pack(">BHHB", 8, 8, 8, 1) + bytes([1, 0x11, 0])))
+    for ss, se, ahal, bits, vals, stream in scans:
+        out += _segment(0xC4, bytes([0x10 if ss else 0x00] + bits + [0] * (16 - len(bits)) + vals))
+        out += _segment(0xDA, bytes([1, 1, 0x00, ss, se, ahal])) + _entropy(stream)
+    return out + b"\xff\xd9"
+
+
+_DC_ZERO = (0, 0, 0x00, [1], [0], "0")  # DC-first scan: diff 0
+
+
+@pytest.mark.parametrize("code_len", [1, 2])  # fast path (len + size <= 16), slow path
+def test_progressive_coefficients_outside_int16_are_rejected(code_len):
+    """AC-first at Al=1 with a 15-bit magnitude: -16384 << 1 = -32768 fits
+    int16 and decodes; 32767 << 1 does not and is rejected. A refinement
+    bit that moves -32768 one step further down is rejected as well."""
+    bits = [2] if code_len == 1 else [0, 2]
+    c0, eob = ("0", "1") if code_len == 1 else ("00", "01")
+    low = (1, 63, 0x01, bits, [0x0F, 0x00], c0 + "011111111111111" + eob)
+    high = (1, 63, 0x01, bits, [0x0F, 0x00], c0 + "111111111111111" + eob)
+    refine = (1, 63, 0x10, [1], [0x00], "0" + "1")  # EOB, then correction 1
+    assert jpeg_decode(_progressive_gray_8x8([_DC_ZERO, low])).shape == (8, 8)
+    with pytest.raises(ValueError, match="int16"):
+        jpeg_decode(_progressive_gray_8x8([_DC_ZERO, high]))
+    with pytest.raises(ValueError, match="int16"):
+        jpeg_decode(_progressive_gray_8x8([_DC_ZERO, low, refine]))

@@ -224,6 +224,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "tokenize":
+        from .caching import release_persisted
         from .config import get_spark
         from .operators.bpe import bpe_segment, bpe_train, bpe_train_fast, bpe_vocab
 
@@ -242,7 +243,7 @@ def main(argv: list[str] | None = None) -> int:
                     docs, num_merges=args.merges, min_pair_freq=args.min_pair_freq
                 )
             vocab_n = bpe_vocab(table).count()
-            table.unpersist()
+            release_persisted()  # bpe_train's checkpoints; the table is done
             os.makedirs(args.out, exist_ok=True)
             with open(os.path.join(args.out, "merges.json"), "w") as f:
                 json.dump([list(m) for m in merges], f)

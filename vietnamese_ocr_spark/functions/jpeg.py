@@ -7,14 +7,18 @@ and the reference's training augmentation `A.ImageCompression(95)`
 (reference src/utils/transform.py) is a JPEG round-trip. This module gives
 both behaviors a real implementation.
 
-Scope (ITU-T T.81 baseline sequential, JFIF container):
+Scope (ITU-T T.81 Huffman-coded DCT, JFIF container):
   encode: 8-bit grayscale or RGB; 4:4:4 or 4:2:0 chroma subsampling;
           Annex K quantization tables with libjpeg-style quality scaling;
-          Annex K standard Huffman tables (no per-image optimization).
-  decode: baseline DCT (SOF0), 1 or 3 components, any (h,v) sampling
-          factors up to 2x2, multiple DQT/DHT segments, restart markers.
-Progressive (SOF2), arithmetic coding, and 12-bit precision are rejected
-with ValueError (callers quarantine, same contract as png_decode).
+          Annex K standard Huffman tables (no per-image optimization);
+          baseline, or progressive with a fixed scan script.
+  decode: baseline (SOF0/SOF1) and progressive (SOF2: spectral selection
+          + successive approximation), 1 or 3 components, any (h,v)
+          sampling factors up to 2x2, multiple DQT/DHT segments, restart
+          markers. Coefficients are held as int16, as libjpeg's JCOEF.
+Lossless and hierarchical frames, arithmetic coding, 12-bit precision and
+coefficients outside int16 are rejected with ValueError (callers
+quarantine, same contract as png_decode).
 
 All constants below are from the public JPEG standard (T.81 Annex K) and
 the JFIF spec; the quality→table scaling is the well-known libjpeg
@@ -25,6 +29,7 @@ sequential — a bitstream).
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import numpy as np
@@ -188,7 +193,9 @@ def _quantize_plane(plane: np.ndarray, qtab: np.ndarray) -> tuple[np.ndarray, in
 
 def _dequantize_plane(zzcoef: np.ndarray, qtab: np.ndarray, bh: int, bw: int) -> np.ndarray:
     coef = np.zeros((zzcoef.shape[0], 64), dtype=np.float64)
-    coef[:, ZZ] = zzcoef * qtab[None, :]
+    # the decoder's int16 coefficients widen here: a product kept at 16
+    # bits would wrap
+    coef[:, ZZ] = np.multiply(zzcoef, qtab[None, :], dtype=np.int64)
     pix = _C.T @ coef.reshape(-1, 8, 8) @ _C + 128.0
     return np.clip(np.round(pix), 0, 255).astype(np.uint8)[: bh * bw].reshape(-1, 8, 8)
 
@@ -329,34 +336,39 @@ def _extend(v: int, s: int) -> int:
     return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
 
 
-def _decode_lut(bits: tuple[int, ...], vals: tuple[int, ...]) -> np.ndarray:
-    """65536-entry fast-decode LUT: entry[p] = (length << 8) | symbol for
-    the code matching 16-bit prefix p; 0 = invalid. Built once per table
-    (cached) — turns Huffman decode into one peek + one array index."""
-    lut = np.zeros(1 << 16, dtype=np.uint32)
+# Decode tables kept per process. A table is ~0.5 MiB, so the cache holds
+# at most ~4 MiB however many distinct tables (optimized per-image tables,
+# DHT floods) a worker meets.
+_LUT_CACHE_SIZE = 8
+
+
+@functools.lru_cache(maxsize=_LUT_CACHE_SIZE)
+def _decode_table(bits: bytes, vals: bytes) -> list[int]:
+    """65536-entry fast-decode LUT for one DHT table (BITS[1..16],
+    HUFFVAL): entry[p] = (length << 8) | symbol for the code matching
+    16-bit prefix p; 0 = invalid. Turns Huffman decode into one peek +
+    one list index (a plain list: indexing skips the numpy-scalar
+    box/unbox on every decoded symbol).
+
+    Each code's run of prefixes is filled by one slice assignment, so
+    every entry of a run is the same int object: the table costs its
+    pointer array, not 65536 separate ints. Codes past the 16-bit space
+    (an invalid, over-subscribed table) are clipped to it. The cached
+    list is shared by every caller and must not be mutated."""
+    lut = [0] * (1 << 16)
     code = 0
     k = 0
     for length in range(1, 17):
+        span = 1 << (16 - length)
         for _ in range(bits[length - 1]):
             sym = vals[k]
             k += 1
             lo = code << (16 - length)
-            lut[lo : lo + (1 << (16 - length))] = (length << 8) | sym
+            hi = min(lo + span, 1 << 16)
+            if lo < hi:
+                lut[lo:hi] = [(length << 8) | sym] * (hi - lo)
             code += 1
         code <<= 1
-    return lut
-
-
-_LUT_CACHE: dict[tuple[tuple[int, ...], tuple[int, ...]], list[int]] = {}
-
-
-def _decode_table(bits: list[int], vals: list[int]) -> list[int]:
-    # stored as a plain Python list (round-7): list indexing skips the
-    # numpy-scalar box/unbox on every decoded symbol
-    key = (tuple(bits), tuple(vals))
-    lut = _LUT_CACHE.get(key)
-    if lut is None:
-        lut = _LUT_CACHE[key] = _decode_lut(*key).tolist()
     return lut
 
 
@@ -1034,7 +1046,12 @@ def _scan_dec_baseline(seq, segs, restart_interval, n_comps) -> None:
                 if limit < 0:
                     raise ValueError("truncated JPEG entropy data")
                 preds[si] += v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-        zz[0] = preds[si]
+        dc = preds[si]
+        # AC magnitudes have at most 15 bits and fit the int16 store; the
+        # running DC predictor need not
+        if dc > 32767 or dc < -32768:
+            raise ValueError("JPEG coefficient outside int16")
+        zz[0] = dc
         k = 1
         while k < 64:
             while n < 16:
@@ -1125,6 +1142,8 @@ def _decode_one_scan(frame, scan_sel, ss, se, ah, al, segs, stores,
         raise ValueError("progressive DC scan must have Se=0")
     if prog and ah not in (0, al + 1):
         raise ValueError("successive approximation must step Al by 1")
+    if prog and al > 13:  # T.81 Table B.3; refinement bits then fit int16
+        raise ValueError("successive approximation Al past 13")
     if interleaved:
         n_units = mcux * mcuy
         bw_eff = 0
@@ -1225,12 +1244,15 @@ def _decode_one_scan(frame, scan_sel, ss, se, ah, al, segs, stores,
 
 # -- progressive block decoders (T.81 G.1.2 / G.2) ---------------------------
 
-def _dec_dc_first(br: _BitReader, dc_tab: np.ndarray, block: np.ndarray,
+def _dec_dc_first(br: _BitReader, dc_tab: list[int], block: np.ndarray,
                   pred: int, al: int) -> int:
     s = _huff_decode(br, dc_tab)
     diff = _extend(br.receive(s), s) if s else 0
     pred += diff
-    block[0] = pred << al
+    c = pred << al
+    if c > 32767 or c < -32768:
+        raise ValueError("JPEG coefficient outside int16")
+    block[0] = c
     return pred
 
 
@@ -1248,6 +1270,7 @@ def _scan_dec_ac_first(blocks, segs, restart_interval, lut, ss, se, al) -> None:
     pos = acc = n = 0
     limit = 8 * len(data) + 16
     eob = 0
+    smax = 15 - al  # an s-bit magnitude shifted by al fits int16 up to here
     for u, block in enumerate(blocks):
         if restart_interval and u and u % restart_interval == 0:
             data = segs[u // restart_interval]
@@ -1292,7 +1315,10 @@ def _scan_dec_ac_first(blocks, segs, restart_interval, lut, ss, se, al) -> None:
                 if limit < 0:
                     raise ValueError("truncated JPEG entropy data")
                 v = (p16 >> (16 - tot)) & ((1 << s) - 1)
-                block[k] = (v if v >= (1 << (s - 1)) else v - (1 << s) + 1) << al
+                c = (v if v >= (1 << (s - 1)) else v - (1 << s) + 1) << al
+                if s > smax and (c > 32767 or c < -32768):
+                    raise ValueError("JPEG coefficient outside int16")
+                block[k] = c
                 k += 1
                 continue
             n -= ln
@@ -1342,7 +1368,10 @@ def _scan_dec_ac_first(blocks, segs, restart_interval, lut, ss, se, al) -> None:
             limit -= s
             if limit < 0:
                 raise ValueError("truncated JPEG entropy data")
-            block[k] = (v if v >= (1 << (s - 1)) else v - (1 << s) + 1) << al
+            c = (v if v >= (1 << (s - 1)) else v - (1 << s) + 1) << al
+            if s > smax and (c > 32767 or c < -32768):
+                raise ValueError("JPEG coefficient outside int16")
+            block[k] = c
             k += 1
 
 
@@ -1354,7 +1383,8 @@ def _scan_dec_ac_refine(blocks, segs, restart_interval, lut, ss, se, al) -> None
     correction bits for the rest of the band. Round-7 second pass: bit
     reader in locals for the whole scan, and each block's band is
     processed as a Python list (numpy scalar reads were ~10x a list
-    element) with one slice write-back only when something changed."""
+    element) with one slice write-back only when something changed. A
+    correction that would take a coefficient below int16 raises."""
     p1, m1 = 1 << al, -1 << al
     data = segs[0]
     pos = acc = n = 0
@@ -1458,7 +1488,10 @@ def _scan_dec_ac_refine(blocks, segs, restart_interval, lut, ss, se, al) -> None
                         if acc >> n:
                             acc &= (1 << n) - 1
                             if (c & p1) == 0:
-                                band[k] = c + (p1 if c >= 0 else m1)
+                                c += p1 if c >= 0 else m1
+                                if c < -32768:
+                                    raise ValueError("JPEG coefficient outside int16")
+                                band[k] = c
                                 dirty = True
                     else:
                         if r == 0:
@@ -1499,7 +1532,10 @@ def _scan_dec_ac_refine(blocks, segs, restart_interval, lut, ss, se, al) -> None
                         if (bits_val >> (m - 1 - i)) & 1:
                             c = band[kk]
                             if (c & p1) == 0:
-                                band[kk] = c + (p1 if c >= 0 else m1)
+                                c += p1 if c >= 0 else m1
+                                if c < -32768:
+                                    raise ValueError("JPEG coefficient outside int16")
+                                band[kk] = c
                                 dirty = True
             eob -= 1
         if dirty:
@@ -1514,7 +1550,7 @@ def jpeg_decode(data: bytes) -> np.ndarray:
         raise ValueError("not a JPEG")
     pos = 2
     qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], np.ndarray] = {}
+    htables: dict[tuple[int, int], list[int]] = {}  # (class, id) -> LUT
     frame = None  # (h, w, [(cid, hi, vi, tq)], progressive)
     restart_interval = 0
     stores: list[np.ndarray] = []
@@ -1545,10 +1581,11 @@ def jpeg_decode(data: bytes) -> np.ndarray:
             bp = 0
             while bp < len(body):
                 tc, th = body[bp] >> 4, body[bp] & 0x0F
-                bits = list(body[bp + 1 : bp + 17])
+                if tc > 1 or th > 3:  # T.81 B.2.4.2: at most 8 live tables
+                    raise ValueError("bad DHT table class/destination")
+                bits = body[bp + 1 : bp + 17]
                 nv = sum(bits)
-                vals = list(body[bp + 17 : bp + 17 + nv])
-                htables[(tc, th)] = _decode_table(bits, vals)
+                htables[(tc, th)] = _decode_table(bits, body[bp + 17 : bp + 17 + nv])
                 bp += 17 + nv
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 progressive
             prec, fh_, fw_, nc = struct.unpack(">BHHB", body[:6])
@@ -1564,9 +1601,10 @@ def jpeg_decode(data: bytes) -> np.ndarray:
             vmax = max(c[2] for c in comps)
             mcux = -(-fw_ // (8 * hmax))
             mcuy = -(-fh_ // (8 * vmax))
-            # per-component zigzag coefficient stores (mcu-aligned)
+            # per-component zigzag coefficient stores (mcu-aligned), int16
+            # as libjpeg's JCOEF: the scan decoders reject values outside it
             stores = [
-                np.zeros((mcuy * vi * mcux * hi, 64), dtype=np.int64)
+                np.zeros((mcuy * vi * mcux * hi, 64), dtype=np.int16)
                 for _cid, hi, vi, _tq in comps
             ]
         elif marker in (0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0xCE, 0xCF):

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import checkpoint_tracked
+
 END = "</w>"  # end-of-word marker, standard BPE
 
 
@@ -77,37 +79,35 @@ def bpe_train(
 ) -> tuple[list[tuple[str, str]], DataFrame]:
     """Train `num_merges` BPE merges on the corpus; returns (merges in
     rank order, final (word, freq, symbols) table). Stops early when no
-    pair reaches `min_pair_freq`."""
-    cur = _initial_symbols(word_frequencies(docs)).localCheckpoint()
+    pair reaches `min_pair_freq`.
+
+    Every round's checkpoint registers with `caching`: read the returned
+    table before `caching.release_persisted()`, which frees them all."""
+    cur = checkpoint_tracked(_initial_symbols(word_frequencies(docs)))
     merges: list[tuple[str, str]] = []
-    try:
-        for _ in range(num_merges):
-            pairs = (
-                cur.select(
-                    "freq",
-                    F.explode(
-                        F.arrays_zip(
-                            F.slice(F.col("symbols"), F.lit(1), F.size("symbols") - 1).alias("a"),
-                            F.slice(F.col("symbols"), F.lit(2), F.size("symbols") - 1).alias("b"),
-                        )
-                    ).alias("p"),
-                )
-                .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-                .agg(F.sum("freq").alias("n"))
+    for _ in range(num_merges):
+        pairs = (
+            cur.select(
+                "freq",
+                F.explode(
+                    F.arrays_zip(
+                        F.slice(F.col("symbols"), F.lit(1), F.size("symbols") - 1).alias("a"),
+                        F.slice(F.col("symbols"), F.lit(2), F.size("symbols") - 1).alias("b"),
+                    )
+                ).alias("p"),
             )
-            top = pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b")).limit(1).collect()
-            if not top or top[0]["n"] < min_pair_freq:
-                break
-            a, b = top[0]["a"], top[0]["b"]
-            merges.append((a, b))
-            nxt = cur.select(
-                "word", "freq", _merge_expr(a, b).alias("symbols")
-            ).localCheckpoint()  # eager: truncates the fold lineage
-            cur.unpersist()
-            cur = nxt
-    except Exception:
-        cur.unpersist()
-        raise
+            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
+            .agg(F.sum("freq").alias("n"))
+        )
+        top = pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b")).limit(1).collect()
+        if not top or top[0]["n"] < min_pair_freq:
+            break
+        a, b = top[0]["a"], top[0]["b"]
+        merges.append((a, b))
+        # eager: truncates the fold lineage
+        cur = checkpoint_tracked(
+            cur.select("word", "freq", _merge_expr(a, b).alias("symbols"))
+        )
     return merges, cur
 
 

@@ -176,13 +176,15 @@ def dom_main_content_stage(docs: DataFrame) -> DataFrame:
     A DOM cannot be expressed in Catalyst expressions, so this is the
     sanctioned Arrow-batched mapInArrow escape hatch (never per-row
     Python UDFs). Prefer the JVM-side extract_main_content for flat
-    markup; reach for this stage when nesting matters."""
+    markup; reach for this stage when nesting matters. NULL text gives
+    NULL main_text."""
 
     def stage(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..functions.dom import dom_main_content
 
         for batch in batches:
-            main = [dom_main_content(t) for t in batch.column("text").to_pylist()]
+            main = [None if t is None else dom_main_content(t)
+                    for t in batch.column("text").to_pylist()]
             yield pa.RecordBatch.from_arrays(
                 [batch.column("doc_id"), string_column(main)], names=["doc_id", "main_text"]
             )
