@@ -22,17 +22,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-HEADLINE = [
-    "ocr_extract", "tpch_q1", "tpch_q3", "tpch_q5", "window_running_sum",
-    "sessionize", "asof_last_click", "cer_corpus", "vocab_build",
-    "dedup_exact", "dedup_minhash_sig", "dedup_minhash_bands",
-    "dedup_minhash_pipeline", "dedup_simhash", "dedup_jaccard",
-    "similarity_topk", "similarity_topk_zip", "similarity_ivf_topk",
-    "similarity_ivf_recall", "similarity_ivf_kmeans", "similarity_knn_join",
-    "lang_id", "quality_score", "pivot_event_counts", "windowed_event_counts",
-    "neardup_batch_mode", "multimodal_image_stats", "image_decode_stats",
-    "pdf_extract_lines", "pdf_scanned_ocr",
-]
+from bench import HEADLINE  # noqa: E402
 
 
 def _session():

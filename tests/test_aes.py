@@ -1,24 +1,16 @@
-"""AES-128 (functions/aes.py): FIPS-197 known-answer pin, CBC/PKCS#7
-round-trips, and the /AESV2 PDF security handler end-to-end."""
+"""AES (functions/aes.py): FIPS-197 known-answer pins at every key size,
+CBC/PKCS#7 round-trips, and the /AESV2 PDF security handler end-to-end."""
 
 from __future__ import annotations
 
 import pytest
 
 from vietnamese_ocr_spark.functions.aes import (
-    aes128_cbc_decrypt,
-    aes128_cbc_encrypt,
-    aes128_decrypt_block,
-    aes128_encrypt_block,
+    aes_cbc_decrypt,
+    aes_cbc_encrypt,
+    aes_decrypt_block,
+    aes_encrypt_block,
 )
-
-
-def test_fips197_appendix_c_vector():
-    key = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
-    pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-    ct = aes128_encrypt_block(pt, key)
-    assert ct.hex() == "69c4e0d86a7b0430d8cdb78070b4c55a"
-    assert aes128_decrypt_block(ct, key) == pt
 
 
 @pytest.mark.parametrize("n", [0, 1, 15, 16, 17, 333])
@@ -26,18 +18,18 @@ def test_cbc_roundtrip_every_padding_class(n):
     key = bytes(range(16))
     iv = bytes(range(100, 116))
     msg = bytes((i * 7) % 256 for i in range(n))
-    enc = aes128_cbc_encrypt(msg, key, iv)
+    enc = aes_cbc_encrypt(msg, key, iv)
     assert enc[:16] == iv and len(enc) % 16 == 0 and len(enc) > len(msg)
-    assert aes128_cbc_decrypt(enc, key) == msg
+    assert aes_cbc_decrypt(enc, key) == msg
 
 
 def test_cbc_wrong_key_or_corruption_raises():
     key = bytes(16)
-    enc = aes128_cbc_encrypt(b"payload bytes here", key, bytes(range(16)))
+    enc = aes_cbc_encrypt(b"payload bytes here", key, bytes(range(16)))
     with pytest.raises(ValueError):
-        aes128_cbc_decrypt(enc, bytes([1]) * 16)  # wrong key -> bad pad
+        aes_cbc_decrypt(enc, bytes([1]) * 16)  # wrong key -> bad pad
     with pytest.raises(ValueError):
-        aes128_cbc_decrypt(enc[:24], key)  # misaligned
+        aes_cbc_decrypt(enc[:24], key)  # misaligned
 
 
 def test_aesv2_pdf_all_layouts():
@@ -86,31 +78,27 @@ def test_aes256_v5_still_quarantines():
 
 
 def test_fips197_appendix_c_192_and_256():
-    """Round-6: the generalized key schedule (Nk=6/8) pinned to the
-    FIPS-197 Appendix C.2/C.3 known-answer vectors."""
-    from vietnamese_ocr_spark.functions.aes import (
-        aes_decrypt_block,
-        aes_encrypt_block,
-    )
-
+    """The key schedule at Nk=4/6/8 pinned to the FIPS-197 Appendix
+    C.1/C.2/C.3 known-answer vectors, both directions."""
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
-    k192 = bytes.fromhex("000102030405060708090a0b0c0d0e0f1011121314151617")
-    k256 = bytes.fromhex(
-        "000102030405060708090a0b0c0d0e0f101112131415161718191a1b1c1d1e1f"
-    )
-    assert aes_encrypt_block(pt, k192).hex() == "dda97ca4864cdfe06eaf70a0ec0d7191"
-    assert aes_encrypt_block(pt, k256).hex() == "8ea2b7ca516745bfeafc49904b496089"
-    for k in (k192, k256):
-        assert aes_decrypt_block(aes_encrypt_block(pt, k), k) == pt
+    vectors = {
+        "000102030405060708090a0b0c0d0e0f": "69c4e0d86a7b0430d8cdb78070b4c55a",
+        "000102030405060708090a0b0c0d0e0f1011121314151617":
+            "dda97ca4864cdfe06eaf70a0ec0d7191",
+        "000102030405060708090a0b0c0d0e0f101112131415161718191a1b1c1d1e1f":
+            "8ea2b7ca516745bfeafc49904b496089",
+    }
+    for key_hex, ct_hex in vectors.items():
+        k = bytes.fromhex(key_hex)
+        assert aes_encrypt_block(pt, k).hex() == ct_hex
+        assert aes_decrypt_block(bytes.fromhex(ct_hex), k) == pt
 
 
 def test_cbc_nopad_roundtrip_all_key_sizes():
     import numpy as np
 
     from vietnamese_ocr_spark.functions.aes import (
-        aes_cbc_decrypt,
         aes_cbc_decrypt_nopad,
-        aes_cbc_encrypt,
         aes_cbc_encrypt_nopad,
     )
 
@@ -124,30 +112,3 @@ def test_cbc_nopad_roundtrip_all_key_sizes():
         ) == blob
         padded = bytes(rng.randint(0, 256, 37, dtype=np.uint8))
         assert aes_cbc_decrypt(aes_cbc_encrypt(padded, key, iv), key) == padded
-
-
-def test_ttable_fast_paths_equal_pinned_implementation():
-    """Round-6: the 32-bit T-table encrypt/decrypt paths (the hot CBC
-    loops) must match the byte-wise FIPS-197 implementation the
-    Appendix C vectors pin, for random blocks at every key size."""
-    import numpy as np
-
-    from vietnamese_ocr_spark.functions.aes import (
-        _decrypt_block,
-        _decrypt_block_fast,
-        _encrypt_block,
-        _encrypt_block_fast,
-        _expand_key,
-        _expand_key_words,
-        _expand_key_words_dec,
-    )
-
-    rng = np.random.RandomState(9)
-    for klen in (16, 24, 32):
-        for _ in range(20):
-            k = bytes(rng.randint(0, 256, klen, dtype=np.uint8))
-            b = bytes(rng.randint(0, 256, 16, dtype=np.uint8))
-            assert _encrypt_block_fast(b, _expand_key_words(k)) == \
-                _encrypt_block(b, _expand_key(k))
-            assert _decrypt_block_fast(b, _expand_key_words_dec(k)) == \
-                _decrypt_block(b, _expand_key(k))

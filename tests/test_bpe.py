@@ -1,6 +1,7 @@
-"""Distributed BPE tokenizer training (operators/bpe.py) vs the classic
-single-process implementation — merges and final vocabulary must match
-exactly (deterministic tie-break: count desc, pair lexicographic)."""
+"""BPE tokenizer training (operators/bpe.py: distributed word count,
+driver-side incremental merges) vs the classic single-process full-recount
+implementation — merges and final vocabulary must match exactly
+(deterministic tie-break: count desc, pair lexicographic)."""
 
 from __future__ import annotations
 
@@ -26,36 +27,30 @@ def _docs(spark):
 
 
 def test_merges_match_single_process(spark):
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
     want_merges, want_vocab = bpe_train_py(TEXTS, num_merges=12)
     got_merges, table = bpe_train(_docs(spark), num_merges=12)
-    try:
-        assert got_merges == want_merges
-        got_vocab = {r["token"]: r["freq"] for r in bpe_vocab(table).collect()}
-        assert got_vocab == want_vocab
-    finally:
-        table.unpersist()
+    assert got_merges == want_merges
+    got_vocab = {r["token"]: r["freq"] for r in bpe_vocab(table).collect()}
+    assert got_vocab == want_vocab
+    assert jsc.getPersistentRDDs().size() == before  # training persists nothing
 
 
 def test_merges_learn_real_subwords(spark):
-    merges, table = bpe_train(_docs(spark), num_merges=12)
-    try:
-        joined = {a + b for a, b in merges}
-        # high-frequency stems/suffixes emerge
-        assert any(tok.startswith("lo") for tok in joined)
-        assert any("er" in tok for tok in joined)
-    finally:
-        table.unpersist()
+    merges, _table = bpe_train(_docs(spark), num_merges=12)
+    joined = {a + b for a, b in merges}
+    # high-frequency stems/suffixes emerge
+    assert any(tok.startswith("lo") for tok in joined)
+    assert any("er" in tok for tok in joined)
 
 
 def test_early_stop_on_min_frequency(spark):
     docs = spark.createDataFrame([("d0", "ab cd ef")], "doc_id string, text string")
-    merges, table = bpe_train(docs, num_merges=50, min_pair_freq=2)
-    try:
-        want, _ = bpe_train_py(["ab cd ef"], num_merges=50, min_pair_freq=2)
-        assert merges == want  # every pair unique -> stops immediately
-        assert merges == []
-    finally:
-        table.unpersist()
+    merges, _table = bpe_train(docs, num_merges=50, min_pair_freq=2)
+    want, _ = bpe_train_py(["ab cd ef"], num_merges=50, min_pair_freq=2)
+    assert merges == want  # every pair unique -> stops immediately
+    assert merges == []
 
 
 def test_word_frequencies(spark):
@@ -64,8 +59,7 @@ def test_word_frequencies(spark):
 
 
 def test_segment_applies_merges_by_rank(spark):
-    merges, table = bpe_train(_docs(spark), num_merges=12)
-    table.unpersist()
+    merges, _table = bpe_train(_docs(spark), num_merges=12)
     from vietnamese_ocr_spark.operators.bpe import bpe_segment, bpe_segment_word
 
     docs = _docs(spark)
@@ -87,18 +81,6 @@ def test_segment_with_no_merges_is_characters(spark):
     docs = spark.createDataFrame([("d0", "ab c")], "doc_id string, text string")
     (row,) = bpe_segment(docs, []).collect()
     assert list(row["tokens"]) == ["a", "b", "</w>", "c", "</w>"]
-
-
-def test_fast_trainer_matches_distributed_and_classic(spark):
-    """bpe_train_fast (driver merge loop over the distributed word table)
-    must produce the identical merge list and final vocabulary."""
-    from vietnamese_ocr_spark.operators.bpe import bpe_train_fast
-
-    want_merges, want_vocab = bpe_train_py(TEXTS, num_merges=12)
-    got_merges, table = bpe_train_fast(_docs(spark), num_merges=12)
-    assert got_merges == want_merges
-    got_vocab = {r["token"]: r["freq"] for r in bpe_vocab(table).collect()}
-    assert got_vocab == want_vocab
 
 
 def test_fast_trainer_matches_classic_on_random_corpora():
@@ -139,13 +121,11 @@ def test_fast_trainer_end_to_end_on_corpus(spark):
     test below.)"""
     import time
 
-    from vietnamese_ocr_spark.operators.bpe import bpe_train_fast
-
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet").select(
         "doc_id", "text"
     )
     t0 = time.monotonic()
-    merges, _tbl = bpe_train_fast(docs, num_merges=1000, min_pair_freq=2)
+    merges, _tbl = bpe_train(docs, num_merges=1000, min_pair_freq=2)
     wall = time.monotonic() - t0
     assert 50 <= len(merges) < 1000, len(merges)  # exhaustion, not cap
     assert wall < 30.0, wall
@@ -154,8 +134,8 @@ def test_fast_trainer_end_to_end_on_corpus(spark):
 def test_fast_trainer_1k_merges_on_50k_word_vocab():
     """The real-vocab-scale contract (round-4 verdict item 4): 1k merges
     over a 50k-distinct-word Zipf table in single-digit seconds — the
-    regime where bpe_train's one-Spark-job-per-merge pattern would need
-    1000 sequential jobs. Driver-side trainer only; the distributed part
+    regime where a one-Spark-job-per-merge trainer would need 1000
+    sequential jobs. Driver-side trainer only; the distributed part
     (word_frequencies) is corpus-size-, not vocab-size-, bound and is
     covered by the end-to-end test above. Lenient bound — shared VM."""
     import random
@@ -174,24 +154,3 @@ def test_fast_trainer_1k_merges_on_50k_word_vocab():
     wall = time.monotonic() - t0
     assert len(merges) == 1000, len(merges)
     assert wall < 20.0, wall
-
-
-def test_release_frees_the_training_checkpoints(spark):
-    """bpe_train checkpoints its word table once per round; the returned
-    table reads from them until caching.release_persisted() frees them
-    all."""
-    from vietnamese_ocr_spark.caching import release_persisted
-
-    jsc = spark.sparkContext._jsc
-    release_persisted()  # drain anything earlier tests left behind
-    before = jsc.getPersistentRDDs().size()
-    docs = spark.createDataFrame(
-        [("d0", "low lower lowest"), ("d1", "low lower newer")],
-        "doc_id string, text string",
-    )
-    merges, table = bpe_train(docs, num_merges=3)
-    assert len(merges) == 3
-    assert bpe_vocab(table).count() > 0
-    assert jsc.getPersistentRDDs().size() > before
-    release_persisted()
-    assert jsc.getPersistentRDDs().size() == before

@@ -253,6 +253,23 @@ def test_dht_outside_the_eight_table_slots_is_rejected(tc_th):
         jpeg_decode(data)
 
 
+def test_dht_tables_are_built_only_when_a_scan_selects_them():
+    """A flood of 5000 distinct one-code DHT segments (~110 KB) with no
+    frame quarantines without building a single decode table: DHT only
+    records (BITS, HUFFVAL), and a table is built at the scan that uses
+    it."""
+    flood = b"".join(
+        _segment(0xC4, bytes([i % 2 << 4 | i % 4] + [0] * (i % 16) + [1]
+                             + [0] * (15 - i % 16) + [i // 16 % 256]))
+        for i in range(5000)
+    )
+    assert 100_000 < len(flood) < 120_000
+    jpeg._decode_table.cache_clear()
+    with pytest.raises(ValueError, match="no frame/scan"):
+        jpeg_decode(b"\xff\xd8" + flood + b"\xff\xd9")
+    assert jpeg._decode_table.cache_info().misses == 0
+
+
 def test_dc_outside_int16_is_rejected():
     """A DC table whose symbol asks for 16 magnitude bits decodes to a
     coefficient of 65535, which the int16 store cannot hold: rejected,

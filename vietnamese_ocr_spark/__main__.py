@@ -62,18 +62,11 @@ def main(argv: list[str] | None = None) -> int:
     tk.add_argument("--merges", type=int, default=64)
     tk.add_argument("--min-pair-freq", type=int, default=2)
     tk.add_argument(
-        "--fast",
-        action="store_true",
-        help="driver-side merge loop over the distributed (word,freq) "
-        "table (bpe_train_fast) — the real-vocab-scale trainer; "
-        "identical merge list",
-    )
-    tk.add_argument(
         "--max-words",
         type=int,
         default=None,
-        help="with --fast: cap the collected word table to the top-N by "
-        "frequency (standard frequency cap for huge corpora)",
+        help="cap the collected word table to the top-N by frequency "
+        "(standard frequency cap for huge corpora)",
     )
     tk.add_argument("--master", default=None)
 
@@ -224,26 +217,19 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "tokenize":
-        from .caching import release_persisted
         from .config import get_spark
-        from .operators.bpe import bpe_segment, bpe_train, bpe_train_fast, bpe_vocab
+        from .operators.bpe import bpe_segment, bpe_train, bpe_vocab
 
         spark = get_spark("tokenize-cli", master=args.master)
         try:
             docs = spark.read.parquet(args.documents).select("doc_id", "text")
-            if args.fast:
-                merges, table = bpe_train_fast(
-                    docs,
-                    num_merges=args.merges,
-                    min_pair_freq=args.min_pair_freq,
-                    max_words=args.max_words,
-                )
-            else:
-                merges, table = bpe_train(
-                    docs, num_merges=args.merges, min_pair_freq=args.min_pair_freq
-                )
+            merges, table = bpe_train(
+                docs,
+                num_merges=args.merges,
+                min_pair_freq=args.min_pair_freq,
+                max_words=args.max_words,
+            )
             vocab_n = bpe_vocab(table).count()
-            release_persisted()  # bpe_train's checkpoints; the table is done
             os.makedirs(args.out, exist_ok=True)
             with open(os.path.join(args.out, "merges.json"), "w") as f:
                 json.dump([list(m) for m in merges], f)

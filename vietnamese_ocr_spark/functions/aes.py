@@ -1,14 +1,26 @@
 """Pure-Python AES-128/192/256 (FIPS-197) + CBC, for PDF /AESV2+/AESV3.
 
+Entry points, one per mode, every key size (16/24/32-byte keys):
+
+  * `aes_encrypt_block` / `aes_decrypt_block` — single-block ECB (the
+    PDF 2.0 /Perms entry);
+  * `aes_cbc_encrypt` / `aes_cbc_decrypt` — PKCS#7-padded CBC with the
+    IV prefixed (the PDF stream form, /AESV2 and /AESV3);
+  * `aes_cbc_encrypt_nopad` / `aes_cbc_decrypt_nopad` — raw CBC over
+    aligned data (the PDF 2.0 key wrap, /UE /OE and Algorithm 2.B).
+
 Built from the public standard: the S-box is COMPUTED (GF(2^8)
 multiplicative inverse + affine transform, FIPS-197 §5.1.1) rather than
-transcribed, and the implementation is pinned to the FIPS-197 Appendix C
-known-answer vector by tests/test_aes.py. Not constant-time — this
-decrypts public-spec PDF streams in a data pipeline, it is not a
-security boundary.
+transcribed. The byte-wise block cipher (`_encrypt_block`,
+`_decrypt_block`) is pinned to the FIPS-197 Appendix C known-answer
+vectors by tests/test_aes.py, and the CBC cores' inlined T-table rounds
+are pinned against it. Not constant-time — this decrypts public-spec
+PDF streams in a data pipeline, it is not a security boundary.
 """
 
 from __future__ import annotations
+
+import functools
 
 _TABLES: dict | None = None
 
@@ -160,18 +172,6 @@ def _inv_mix_columns(s: list[int]) -> list[int]:
     return out
 
 
-def aes128_encrypt_block(block: bytes, key: bytes) -> bytes:
-    if len(block) != 16 or len(key) != 16:
-        raise ValueError("AES-128 needs 16-byte block and key")
-    return _encrypt_block(block, _expand_key(key))
-
-
-def aes128_decrypt_block(block: bytes, key: bytes) -> bytes:
-    if len(block) != 16 or len(key) != 16:
-        raise ValueError("AES-128 needs 16-byte block and key")
-    return _decrypt_block(block, _expand_key(key))
-
-
 def _cbc_encrypt_core(data: bytes, kw: tuple[int, ...], iv: bytes) -> bytearray:
     """CBC over 16-byte-aligned data with the whole T-table round
     function inlined in the block loop (round-7: state stays in four
@@ -255,28 +255,6 @@ def _cbc_decrypt_core(data: bytes, kwd: tuple[int, ...], iv: bytes,
     return out
 
 
-def aes128_cbc_encrypt(data: bytes, key: bytes, iv: bytes) -> bytes:
-    """PKCS#7-pad + CBC; returns iv + ciphertext (the PDF stream form)."""
-    if len(iv) != 16:
-        raise ValueError("bad IV length")
-    kw = _expand_key_words(bytes(key))
-    pad = 16 - (len(data) % 16)
-    data = data + bytes([pad]) * pad
-    return bytes(iv) + bytes(_cbc_encrypt_core(data, kw, iv))
-
-
-def aes128_cbc_decrypt(data: bytes, key: bytes) -> bytes:
-    """Inverse of aes128_cbc_encrypt: data = iv + ciphertext."""
-    if len(data) < 32 or len(data) % 16:
-        raise ValueError("bad AES-CBC stream length")
-    kwd = _expand_key_words_dec(bytes(key))
-    out = _cbc_decrypt_core(data, kwd, data[:16], 16)
-    pad = out[-1]
-    if not (1 <= pad <= 16) or out[-pad:] != bytes([pad]) * pad:
-        raise ValueError("bad AES padding (wrong key or corrupt stream)")
-    return bytes(out[:-pad])
-
-
 def aes_encrypt_block(block: bytes, key: bytes) -> bytes:
     """Single-block ECB for any FIPS-197 key size (PDF /Perms entry)."""
     if len(block) != 16:
@@ -307,8 +285,8 @@ def aes_cbc_decrypt_nopad(data: bytes, key: bytes, iv: bytes) -> bytes:
 
 
 def aes_cbc_encrypt(data: bytes, key: bytes, iv: bytes) -> bytes:
-    """PKCS#7-pad + CBC, iv-prefixed (PDF string/stream form), any key
-    size — the /AESV3 (256-bit) generalization of aes128_cbc_encrypt."""
+    """PKCS#7-pad + CBC, iv-prefixed (the PDF stream form), any key size:
+    /AESV2 (128-bit per-object keys) and /AESV3 (256-bit file key)."""
     if len(iv) != 16:
         raise ValueError("bad IV length")
     kw = _expand_key_words(bytes(key))
@@ -329,14 +307,14 @@ def aes_cbc_decrypt(data: bytes, key: bytes) -> bytes:
     return bytes(out[:-pad])
 
 
-# -- T-table encryption fast path ---------------------------------------------
+# -- T-tables for the CBC cores ------------------------------------------------
 #
 # The standard 32-bit-word formulation from the public Rijndael/AES
 # proposal: SubBytes+ShiftRows+MixColumns fold into four 256-entry
 # word tables (Te1..Te3 are byte rotations of Te0). Same FIPS-197
-# semantics — pinned to the same Appendix C vectors — but ~10x fewer
-# Python operations per block, which matters because PDF 2.0's
-# Algorithm 2.B runs ~17k sequential CBC block encrypts per hash.
+# semantics as the byte-wise block cipher but ~10x fewer Python
+# operations per block, which matters because PDF 2.0's Algorithm 2.B
+# runs ~17k sequential CBC block encrypts per hash.
 
 _ENC_T: dict | None = None
 
@@ -359,9 +337,6 @@ def _enc_tables() -> dict:
     return _ENC_T
 
 
-import functools
-
-
 @functools.lru_cache(maxsize=32)
 def _expand_key_words(key: bytes) -> tuple[int, ...]:
     rk = _expand_key(key)
@@ -372,37 +347,6 @@ def _expand_key_words(key: bytes) -> tuple[int, ...]:
                 (rnd[j] << 24) | (rnd[j + 1] << 16) | (rnd[j + 2] << 8) | rnd[j + 3]
             )
     return tuple(out)
-
-
-def _encrypt_block_fast(block: bytes, kw: tuple[int, ...]) -> bytes:
-    et = _enc_tables()
-    te0, te1, te2, te3 = et["te"]
-    sbox = et["sbox"]
-    nr = len(kw) // 4 - 1
-    s0 = int.from_bytes(block[0:4], "big") ^ kw[0]
-    s1 = int.from_bytes(block[4:8], "big") ^ kw[1]
-    s2 = int.from_bytes(block[8:12], "big") ^ kw[2]
-    s3 = int.from_bytes(block[12:16], "big") ^ kw[3]
-    k = 4
-    for _ in range(nr - 1):
-        t0 = te0[s0 >> 24] ^ te1[(s1 >> 16) & 255] ^ te2[(s2 >> 8) & 255] ^ te3[s3 & 255] ^ kw[k]
-        t1 = te0[s1 >> 24] ^ te1[(s2 >> 16) & 255] ^ te2[(s3 >> 8) & 255] ^ te3[s0 & 255] ^ kw[k + 1]
-        t2 = te0[s2 >> 24] ^ te1[(s3 >> 16) & 255] ^ te2[(s0 >> 8) & 255] ^ te3[s1 & 255] ^ kw[k + 2]
-        t3 = te0[s3 >> 24] ^ te1[(s0 >> 16) & 255] ^ te2[(s1 >> 8) & 255] ^ te3[s2 & 255] ^ kw[k + 3]
-        s0, s1, s2, s3 = t0, t1, t2, t3
-        k += 4
-    out = bytearray(16)
-    for j, (a, b, c, d) in enumerate(
-        ((s0, s1, s2, s3), (s1, s2, s3, s0), (s2, s3, s0, s1), (s3, s0, s1, s2))
-    ):
-        w = (
-            (sbox[a >> 24] << 24)
-            | (sbox[(b >> 16) & 255] << 16)
-            | (sbox[(c >> 8) & 255] << 8)
-            | sbox[d & 255]
-        ) ^ kw[k + j]
-        out[4 * j : 4 * j + 4] = w.to_bytes(4, "big")
-    return bytes(out)
 
 
 # Decrypt-side T-tables: InvSubBytes+InvShiftRows+InvMixColumns folded
@@ -443,10 +387,7 @@ def _inv_mix_word(w: int) -> int:
     return out
 
 
-import functools as _ft
-
-
-@_ft.lru_cache(maxsize=32)
+@functools.lru_cache(maxsize=32)
 def _expand_key_words_dec(key: bytes) -> tuple[int, ...]:
     """Equivalent-inverse-cipher key schedule: encryption round keys in
     REVERSE round order, inner rounds passed through InvMixColumns."""
@@ -459,34 +400,3 @@ def _expand_key_words_dec(key: bytes) -> tuple[int, ...]:
             words = tuple(_inv_mix_word(w) for w in words)
         out.extend(words)
     return tuple(out)
-
-
-def _decrypt_block_fast(block: bytes, kwd: tuple[int, ...]) -> bytes:
-    dt = _dec_tables()
-    td0, td1, td2, td3 = dt["td"]
-    isb = dt["isb"]
-    nr = len(kwd) // 4 - 1
-    s0 = int.from_bytes(block[0:4], "big") ^ kwd[0]
-    s1 = int.from_bytes(block[4:8], "big") ^ kwd[1]
-    s2 = int.from_bytes(block[8:12], "big") ^ kwd[2]
-    s3 = int.from_bytes(block[12:16], "big") ^ kwd[3]
-    k = 4
-    for _ in range(nr - 1):
-        t0 = td0[s0 >> 24] ^ td1[(s3 >> 16) & 255] ^ td2[(s2 >> 8) & 255] ^ td3[s1 & 255] ^ kwd[k]
-        t1 = td0[s1 >> 24] ^ td1[(s0 >> 16) & 255] ^ td2[(s3 >> 8) & 255] ^ td3[s2 & 255] ^ kwd[k + 1]
-        t2 = td0[s2 >> 24] ^ td1[(s1 >> 16) & 255] ^ td2[(s0 >> 8) & 255] ^ td3[s3 & 255] ^ kwd[k + 2]
-        t3 = td0[s3 >> 24] ^ td1[(s2 >> 16) & 255] ^ td2[(s1 >> 8) & 255] ^ td3[s0 & 255] ^ kwd[k + 3]
-        s0, s1, s2, s3 = t0, t1, t2, t3
-        k += 4
-    out = bytearray(16)
-    for j, (a, b, c, d) in enumerate(
-        ((s0, s3, s2, s1), (s1, s0, s3, s2), (s2, s1, s0, s3), (s3, s2, s1, s0))
-    ):
-        w = (
-            (isb[a >> 24] << 24)
-            | (isb[(b >> 16) & 255] << 16)
-            | (isb[(c >> 8) & 255] << 8)
-            | isb[d & 255]
-        ) ^ kwd[k + j]
-        out[4 * j : 4 * j + 4] = w.to_bytes(4, "big")
-    return bytes(out)

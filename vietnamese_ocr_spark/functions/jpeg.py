@@ -1129,7 +1129,9 @@ def _decode_one_scan(frame, scan_sel, ss, se, ah, al, segs, stores,
     stores. Interleaved scans walk MCU order; single-component scans walk
     the component's own ceil(dim/8) block grid (NOT mcu-padded — the
     classic non-interleaved gotcha). Restart segments reset DC
-    predictors and the EOB run."""
+    predictors and the EOB run. `htables` maps (class, id) to the
+    (BITS, HUFFVAL) a DHT last defined there; only the tables this scan
+    decodes with are built."""
     fh, fw, comps, prog = frame
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
@@ -1171,7 +1173,7 @@ def _decode_one_scan(frame, scan_sel, ss, se, ah, al, segs, stores,
             stores[ci0][(u // bw_eff) * row_w + (u % bw_eff)]
             for u in range(n_units)
         ]
-        lut = htables[(1, act0)]
+        lut = _decode_table(*htables[(1, act0)])
         if ah == 0:
             _scan_dec_ac_first(blocks, segs, restart_interval, lut, ss, se, al)
         else:
@@ -1180,18 +1182,23 @@ def _decode_one_scan(frame, scan_sel, ss, se, ah, al, segs, stores,
     if not prog:
         # baseline scan: flatten the MCU walk into stream order once,
         # then decode with the bit reader in locals for the whole scan
+        luts = [
+            (_decode_table(*htables[(0, dct)]), _decode_table(*htables[(1, act)]))
+            for _ci, dct, act in scan_sel
+        ]
         seq = []
         for u in range(n_units):
-            for si, (ci, dct, act) in enumerate(scan_sel):
+            for si, (ci, _dct, _act) in enumerate(scan_sel):
                 _cid, hi, vi, _tq = comps[ci]
+                dc_lut, ac_lut = luts[si]
                 if interleaved:
                     my, mx = divmod(u, mcux)
                     for dy in range(vi):
                         for dx in range(hi):
                             seq.append((
                                 si,
-                                htables[(0, dct)],
-                                htables[(1, act)],
+                                dc_lut,
+                                ac_lut,
                                 stores[ci][
                                     (my * vi + dy) * (mcux * hi) + (mx * hi + dx)
                                 ],
@@ -1200,8 +1207,8 @@ def _decode_one_scan(frame, scan_sel, ss, se, ah, al, segs, stores,
                     by, bx = divmod(u, bw_eff)
                     seq.append((
                         si,
-                        htables[(0, dct)],
-                        htables[(1, act)],
+                        dc_lut,
+                        ac_lut,
                         stores[ci][by * (mcux * hi) + bx],
                     ))
         # restart boundaries are per-MCU; with one block per MCU entry the
@@ -1215,13 +1222,15 @@ def _decode_one_scan(frame, scan_sel, ss, se, ah, al, segs, stores,
         )
         return
 
+    if ah == 0:  # a DC refinement scan reads raw bits, no table
+        dc_luts = [_decode_table(*htables[(0, dct)]) for _ci, dct, _act in scan_sel]
     br = _BitReader(segs[0])
     preds = [0] * len(scan_sel)
     for u in range(n_units):
         if restart_interval and u and u % restart_interval == 0:
             br = _BitReader(segs[u // restart_interval])
             preds = [0] * len(scan_sel)
-        for si, (ci, dct, act) in enumerate(scan_sel):
+        for si, (ci, _dct, _act) in enumerate(scan_sel):
             _cid, hi, vi, _tq = comps[ci]
             if interleaved:
                 my, mx = divmod(u, mcux)
@@ -1236,7 +1245,7 @@ def _decode_one_scan(frame, scan_sel, ss, se, ah, al, segs, stores,
             for block in blocks:
                 if ah == 0:
                     preds[si] = _dec_dc_first(
-                        br, htables[(0, dct)], block, preds[si], al
+                        br, dc_luts[si], block, preds[si], al
                     )
                 else:
                     _dec_dc_refine(br, block, al)
@@ -1550,7 +1559,8 @@ def jpeg_decode(data: bytes) -> np.ndarray:
         raise ValueError("not a JPEG")
     pos = 2
     qtables: dict[int, np.ndarray] = {}
-    htables: dict[tuple[int, int], list[int]] = {}  # (class, id) -> LUT
+    # (class, id) -> (BITS, HUFFVAL); a scan builds the LUTs it selects
+    htables: dict[tuple[int, int], tuple[bytes, bytes]] = {}
     frame = None  # (h, w, [(cid, hi, vi, tq)], progressive)
     restart_interval = 0
     stores: list[np.ndarray] = []
@@ -1585,7 +1595,7 @@ def jpeg_decode(data: bytes) -> np.ndarray:
                     raise ValueError("bad DHT table class/destination")
                 bits = body[bp + 1 : bp + 17]
                 nv = sum(bits)
-                htables[(tc, th)] = _decode_table(bits, body[bp + 17 : bp + 17 + nv])
+                htables[(tc, th)] = (bits, body[bp + 17 : bp + 17 + nv])
                 bp += 17 + nv
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 progressive
             prec, fh_, fw_, nc = struct.unpack(">BHHB", body[:6])

@@ -497,7 +497,7 @@ def pdf_encrypt_aes(
     key = _std_key(upw, o_entry, p, file_id, r, n)
     u_entry = _std_user_entry(key, file_id, r)
 
-    from .aes import aes128_cbc_encrypt
+    from .aes import aes_cbc_encrypt
 
     nums = sorted(doc.objects)
     enc_num = max(nums) + 1
@@ -508,7 +508,7 @@ def pdf_encrypt_aes(
         offsets[num] = len(out)
         if num in doc.streams:
             iv = hashlib.md5(b"iv%d" % num).digest()[:16]
-            enc = aes128_cbc_encrypt(doc.streams[num], _obj_aes_key(key, num), iv)
+            enc = aes_cbc_encrypt(doc.streams[num], _obj_aes_key(key, num), iv)
             if isinstance(obj, dict):
                 obj = {**obj, "/Length": len(enc)}
             out += b"%d 0 obj\n" % num + _ser_value(obj)
@@ -1353,14 +1353,12 @@ class PdfDocument:
             and num != self._enc_num
             and obj.get("/Type") != "/XRef"
         ):  # the encrypt dict and xref streams are never encrypted
-            if self._enc_v5:
+            if self._enc_aes:  # /AESV2, or /AESV3 under /V 5
                 from .aes import aes_cbc_decrypt
 
-                raw = aes_cbc_decrypt(raw, self._enc_key)
-            elif self._enc_aes:
-                from .aes import aes128_cbc_decrypt
-
-                raw = aes128_cbc_decrypt(raw, _obj_aes_key(self._enc_key, num))
+                key = (self._enc_key if self._enc_v5
+                       else _obj_aes_key(self._enc_key, num))
+                raw = aes_cbc_decrypt(raw, key)
             else:
                 raw = _rc4(_obj_rc4_key(self._enc_key, num), raw)
         return raw

@@ -1,35 +1,32 @@
-"""Distributed BPE tokenizer training (Sennrich et al., "Neural Machine
-Translation of Rare Words with Subword Units", ACL 2016).
+"""BPE tokenizer training and segmentation (Sennrich et al., "Neural
+Machine Translation of Rare Words with Subword Units", ACL 2016).
 
 The canonical pre-training preprocessing step the reference never needed
 (its vocab is fixed characters, src/utils/vocab.py) but any 100-TB text
-pipeline does. Shape:
+pipeline does. Shape (the one `bpe_train`):
 
-  * the corpus collapses ONCE into a (word, freq) table — after that,
-    every merge iteration runs over distinct words only (typically
-    10^6-10^8 rows at web scale, not 10^12 documents);
-  * each iteration: adjacent-pair counts via a map-side-combined
-    groupBy (the shuffle carries (pair, partial count) only), a 1-row
-    argmax collected to the driver (deterministic tie-break: count
-    desc, then pair lexicographic), and a greedy left-to-right merge
-    applied as a pure `aggregate` Column fold — no Python in the data
-    path;
-  * `localCheckpoint` truncates the plan each round (k nested folds
-    would otherwise blow up Catalyst analysis — same discipline as
-    operators/components.py's pointer-jumping loop).
+  * the corpus collapses ONCE, distributed, into a (word, freq) table —
+    the only pass that touches the documents; after that, work scales
+    with distinct words (typically 10^6-10^8 rows at web scale, not
+    10^12 documents), optionally capped to the top-N by frequency;
+  * the merge loop runs driver-side over that table with incremental
+    pair-count updates and a lazy max-heap argmax (deterministic
+    tie-break: count desc, then pair lexicographic) — the standard
+    industrial shape (HF tokenizers, SentencePiece: distributed count,
+    single-node merge loop);
+  * segmentation (`bpe_segment`) applies the learned merges by rank in
+    an Arrow-batched worker stage.
 
-Iterative argmax-per-round is not expressible as one SQL query, so this
-operator is verified against a single-process mirror (`bpe_train_py`)
-instead of a DuckDB oracle — the same contract as the streaming state
-operators.
+Iterative argmax-per-round is not expressible as one SQL query, so the
+trainer is verified against a single-process full-recount mirror
+(`bpe_train_py`) instead of a DuckDB oracle — the same contract as the
+streaming state operators.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from ..caching import checkpoint_tracked
 
 END = "</w>"  # end-of-word marker, standard BPE
 
@@ -42,73 +39,6 @@ def word_frequencies(docs: DataFrame) -> DataFrame:
         .groupBy("word")
         .agg(F.count("*").alias("freq"))
     )
-
-
-def _initial_symbols(words: DataFrame) -> DataFrame:
-    """word -> its character sequence + the end-of-word marker."""
-    return words.select(
-        "word",
-        "freq",
-        F.concat(
-            F.split(F.col("word"), ""), F.array(F.lit(END))
-        ).alias("symbols"),
-    )
-
-
-def _merge_expr(a: str, b: str):
-    """Greedy left-to-right merge of adjacent (a, b) -> a+b as a pure
-    Column fold. The fold's accumulator semantics give exact BPE
-    behavior: once merged, the new token is the 'last' element, so an
-    overlapping second merge cannot fire."""
-    return F.aggregate(
-        F.col("symbols"),
-        F.array().cast("array<string>"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (x == F.lit(b)),
-            F.concat(
-                F.slice(acc, F.lit(1), F.size(acc) - 1), F.array(F.lit(a + b))
-            ),
-        ).otherwise(F.concat(acc, F.array(x))),
-    )
-
-
-def bpe_train(
-    docs: DataFrame, num_merges: int = 32, min_pair_freq: int = 2
-) -> tuple[list[tuple[str, str]], DataFrame]:
-    """Train `num_merges` BPE merges on the corpus; returns (merges in
-    rank order, final (word, freq, symbols) table). Stops early when no
-    pair reaches `min_pair_freq`.
-
-    Every round's checkpoint registers with `caching`: read the returned
-    table before `caching.release_persisted()`, which frees them all."""
-    cur = checkpoint_tracked(_initial_symbols(word_frequencies(docs)))
-    merges: list[tuple[str, str]] = []
-    for _ in range(num_merges):
-        pairs = (
-            cur.select(
-                "freq",
-                F.explode(
-                    F.arrays_zip(
-                        F.slice(F.col("symbols"), F.lit(1), F.size("symbols") - 1).alias("a"),
-                        F.slice(F.col("symbols"), F.lit(2), F.size("symbols") - 1).alias("b"),
-                    )
-                ).alias("p"),
-            )
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("freq").alias("n"))
-        )
-        top = pairs.orderBy(F.desc("n"), F.asc("a"), F.asc("b")).limit(1).collect()
-        if not top or top[0]["n"] < min_pair_freq:
-            break
-        a, b = top[0]["a"], top[0]["b"]
-        merges.append((a, b))
-        # eager: truncates the fold lineage
-        cur = checkpoint_tracked(
-            cur.select("word", "freq", _merge_expr(a, b).alias("symbols"))
-        )
-    return merges, cur
 
 
 def bpe_vocab(symbols_table: DataFrame) -> DataFrame:
@@ -186,27 +116,22 @@ def _train_from_word_freqs(
     return merges, words
 
 
-def bpe_train_fast(
+def bpe_train(
     docs: DataFrame,
     num_merges: int = 1000,
     min_pair_freq: int = 2,
     max_words: int | None = None,
 ) -> tuple[list[tuple[str, str]], DataFrame]:
-    """BPE training at real vocab scale (the 1k-32k merge regime where
-    `bpe_train`'s one-Spark-job-per-merge pattern becomes 32k sequential
-    jobs): ONE distributed pass collapses the corpus to the (word, freq)
-    table — the only part that touches 10^12 documents — then the merges
-    run driver-side over that table with incremental pair-count updates.
-    This is the standard industrial shape (HF tokenizers, SentencePiece:
-    distributed count, single-node merge loop), because post-collapse the
-    table is distinct-words-sized (10^6-10^8 rows ~ GBs at web scale,
-    far below driver memory after `max_words` capping).
+    """Train up to `num_merges` BPE merges on the corpus: ONE distributed
+    pass collapses it to the (word, freq) table, then the merges run
+    driver-side over that table (`_train_from_word_freqs`). Stops early
+    when no pair reaches `min_pair_freq`.
 
     `max_words` keeps the top-N words by (freq desc, word asc) — the
-    standard frequency-cap; None collects everything. Merge list is
-    IDENTICAL to `bpe_train`/`bpe_train_py` on the same word table
-    (test_bpe pins this). Returns (merges, final (word, freq, symbols)
-    DataFrame), same contract as `bpe_train`."""
+    standard frequency cap for huge corpora; None collects everything.
+    The merge list is IDENTICAL to `bpe_train_py`'s on the same word
+    table (test_bpe pins this). Returns (merges in rank order, final
+    (word, freq, symbols) DataFrame); nothing is persisted."""
     wf = word_frequencies(docs)
     if max_words is not None:
         wf = wf.orderBy(F.desc("freq"), F.asc("word")).limit(max_words)

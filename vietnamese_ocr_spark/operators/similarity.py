@@ -105,15 +105,7 @@ def cosine_topk_zip(embeddings: DataFrame, query_vec_id: int, k: int = 10) -> Da
     explode, no join, no aggregation shuffle; the only exchange is the
     final k-row top-k. Same output, same oracle; strictly better plan
     for the single-query case."""
-    q = _query_vec(embeddings, query_vec_id)
-    qlit = F.array(*[F.lit(float(x)) for x in q])
-    nq = float(sum(x * x for x in q)) ** 0.5
-    v = _vec()
-    scored = _respread(embeddings).select(
-        "vec_id",
-        F.round(_dot(v, qlit) / (F.sqrt(_sq_norm(v)) * F.lit(nq)), 6).alias("cosine"),
-    )
-    return scored.orderBy(F.desc("cosine"), F.asc("vec_id")).limit(k)
+    return cosine_topk_against(_respread(embeddings), embeddings, query_vec_id, k)
 
 
 def cosine_topk_against(candidates: DataFrame, embeddings: DataFrame,

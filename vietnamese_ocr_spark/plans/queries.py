@@ -710,12 +710,12 @@ def q_bpe_segment(spark, sf):
     Arrow-batched segmentation stage over the corpus. Emits scalar
     (doc_id, n_tokens, tokens_md5) so the golden-parquet oracle can
     value-hash the full token stream without array columns."""
-    from ..operators.bpe import bpe_segment, bpe_train_fast
+    from ..operators.bpe import bpe_segment, bpe_train
 
     d = t(spark, sf, "documents").select(
         F.col("doc_id").cast("string").alias("doc_id"), "text"
     )
-    merges, _ = bpe_train_fast(
+    merges, _ = bpe_train(
         d, num_merges=200, min_pair_freq=2, max_words=20000
     )
     return bpe_segment(d, merges).select(
