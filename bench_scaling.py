@@ -19,7 +19,8 @@ docs carry 100-150 max-height media spans — ~100x the media payload of a
 typical doc), then measures the OCR stage's per-task times under three
 partitionings (none = scan order, hash = by media_ref, salted = the
 production size-bucket x salt shuffle) and runs the 2->8 ladder on the
-skewed corpus. Appends the evidence to BENCH/BASELINE.md.
+skewed corpus. Writes the evidence in place of BENCH/BASELINE.md's
+whale-skew section, keeping the ladder part above it.
 """
 
 from __future__ import annotations
@@ -160,6 +161,21 @@ def measure_skew(cpus: int, corpus_dir: str, mode: str) -> dict:
     }
 
 
+BASELINE_MD = "BENCH/BASELINE.md"
+SKEW_HEADER = "\n## Whale-skew proof"
+
+
+def _split_baseline() -> tuple[str, str]:
+    """BASELINE_MD cut at its first whale-skew header: (the ladder part,
+    the skew part). Each suite rewrites its own part and keeps the other."""
+    if not os.path.exists(BASELINE_MD):
+        return "", ""
+    with open(BASELINE_MD) as f:
+        prev = f.read()
+    idx = prev.find(SKEW_HEADER)
+    return (prev, "") if idx < 0 else (prev[:idx], prev[idx:])
+
+
 def run_skew_suite(n_docs: int) -> int:
     corpus = ensure_skewed_corpus(n_docs)
 
@@ -197,9 +213,10 @@ def run_skew_suite(n_docs: int) -> int:
         f"| {v['task_max_s']} | {v['straggler_ratio']} | {v['task_cv']} |\n"
         for m, v in modes.items()
     )
-    with open("BENCH/BASELINE.md", "a") as f:
+    ladder_part, _ = _split_baseline()
+    with open(BASELINE_MD, "w") as f:
         f.write(
-            "\n## Whale-skew proof (round 4; SURVEY §7 hard-point d)\n\n"
+            ladder_part + SKEW_HEADER + " (round 4; SURVEY §7 hard-point d)\n\n"
             f"Skewed corpus: {n_docs} docs, 1% whales carrying 100-150\n"
             "max-height media spans each (~100x a typical doc's media\n"
             "payload); whale media sit contiguously in the media table, so\n"
@@ -279,15 +296,9 @@ def main() -> int:
         f"| {v['n4']['wall_s']} | {v['n4']['docs_per_sec']} | {v['efficiency']} |\n"
         for k, v in ladders.items()
     )
-    # preserve appended sections (e.g. the --skew proof) across rewrites
-    tail = ""
-    if os.path.exists("BENCH/BASELINE.md"):
-        with open("BENCH/BASELINE.md") as f:
-            prev = f.read()
-        idx = prev.find("\n## Whale-skew proof")
-        if idx >= 0:
-            tail = prev[idx:]
-    with open("BENCH/BASELINE.md", "w") as f:
+    # keep the --skew proof across rewrites
+    _, tail = _split_baseline()
+    with open(BASELINE_MD, "w") as f:
         f.write(
             "# BENCH baseline — scaling evidence (north_rule)\n\n"
             "Identical extraction job (read -> explode -> route -> salted\n"

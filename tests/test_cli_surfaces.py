@@ -34,15 +34,13 @@ def test_explain_cli_rejects_unknown_query():
 
 def test_tokenize_cli(tmp_path):
     import json
-    import subprocess
-    import sys
 
     out = subprocess.run(
         [sys.executable, "-m", "vietnamese_ocr_spark", "tokenize",
          "--documents", "/root/testdata/sf0.001/documents.parquet",
          "--out", str(tmp_path / "tok"), "--merges", "8",
          "--master", "local[4]"],
-        capture_output=True, text=True, check=True, cwd="/root/repo",
+        capture_output=True, text=True, check=True, cwd=REPO,
     )
     stats = json.loads(out.stdout.strip().splitlines()[-1])
     assert stats["merges"] == 8 and stats["docs"] > 0 and stats["total_tokens"] > 0

@@ -1,22 +1,43 @@
-"""The curation stages (dedup, textstats) are mapInArrow functions whose
-workers never load pandas.
+"""Every batch Python stage is a mapInArrow (or applyInArrow) function whose
+workers never load pandas; only the two streaming dedup stages are pandas
+UDFs.
 
-The rows below were produced by the same stages when they ran through
-mapInPandas; converting the boundary must not move a value, a type, a NULL
-or a row. All Spark work runs in the suite's session.
+The curation rows below were produced by the same stages when they ran
+through mapInPandas; converting the boundary must not move a value, a type,
+a NULL or a row. The row stages (multimodal, pdfops, sf_adapter, batching)
+are pinned against their single-process row functions. All Spark work runs
+in the suite's session.
 """
 
 from __future__ import annotations
 
 import ast
 import os
+import subprocess
+import sys
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql.pandas.types import to_arrow_type
+from pyspark.sql.types import (
+    ArrayType, BinaryType, BooleanType, DoubleType, FloatType, IntegerType, LongType,
+    StringType, StructField, StructType,
+)
 
 from vietnamese_ocr_spark.operators import dedup, textstats
+from vietnamese_ocr_spark.operators.arrow_batch import column
 
-PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "vietnamese_ocr_spark")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+PKG = os.path.join(REPO, "vietnamese_ocr_spark")
+
+# the stages that still run pandas UDFs (applyInPandasWithState), until an
+# Arrow or Row-mode transformWithState is shown to keep pandas out
+PANDAS_MODULES = ("streaming/dedup_stream.py", "streaming/neardup_stream.py")
+RUNTIME_MODULES = sorted(
+    os.path.relpath(os.path.join(d, f), PKG)
+    for d, _, files in os.walk(PKG) for f in files if f.endswith(".py")
+)
 
 EDGE_ROWS = [
     (1, None),
@@ -129,15 +150,55 @@ def _rows(name, df):
     return rows
 
 
-def test_stages_keep_their_rows_and_never_load_pandas(spark):
+def _row_stages(spark, sf_dir):
+    """One multimodal, one pdfops and the batching stage over sf_adapter
+    derivations of `sf_dir`: name -> (DataFrame, row key, expected rows)."""
+    from vietnamese_ocr_spark.operators.batching import pad_stack_batches
+    from vietnamese_ocr_spark.operators.multimodal import decode_stats_row, image_decode_stats
+    from vietnamese_ocr_spark.operators.pdfops import pdf_extract_lines, pdf_line_rows
+    from vietnamese_ocr_spark.sources import sf_adapter
+
+    docs = pq.read_table(os.path.join(sf_dir, "documents.parquet")).to_pylist()
+    mixed = [a for d in docs if (a := sf_adapter.mixed_asset(d["doc_id"], d["text"]))]
+    pdfs = [a for d in docs if (a := sf_adapter.pdf_asset(d["doc_id"], d["text"]))]
+    n_media = sum(len(sf_adapter._media_rows(d["doc_id"], d["text"])) for d in docs)
+    media = sf_adapter.derive_media(spark, sf_dir).select("media_ref", "png")
+    return {
+        "image_decode_stats": (
+            image_decode_stats(sf_adapter.derive_mixed_assets(spark, sf_dir)),
+            lambda r: r["asset_id"],
+            [decode_stats_row(a["asset_id"], a["fmt"], a["payload"]) for a in mixed],
+        ),
+        "pdf_extract_lines": (
+            pdf_extract_lines(sf_adapter.derive_pdf_assets(spark, sf_dir)),
+            lambda r: (r["asset_id"], r["page"] or 0, r["line_no"] or 0),
+            [r for a in pdfs for r in pdf_line_rows(a["asset_id"], a["payload"])],
+        ),
+        "pad_stack_batches": (
+            pad_stack_batches(media, batch_size=3).select("batch_id", "n"),
+            lambda r: r["batch_id"],
+            [{"batch_id": b, "n": min(3, n_media - 3 * b)}
+             for b in range((n_media + 2) // 3)],
+        ),
+    }
+
+
+def test_stages_keep_their_rows_and_never_load_pandas(spark, tmp_path):
     """NULL text, "", one and two words, a repeated 3-gram, Vietnamese
     diacritics and empty partitions (8 rows over 12 partitions, and the
     dedup stages re-spread over 12) give the rows and schemas the
-    mapInPandas stages gave. A fresh environment entry gives these jobs a
-    Python worker pool of their own (Spark keys pools on the UDF
-    environment), so every worker a mapInArrow probe can land on afterwards
-    has run only these stages: it must have their builders and no pandas."""
+    mapInPandas stages gave; the row stages give their row functions'
+    rows. A fresh environment entry gives these jobs a Python worker pool
+    of their own (Spark keys pools on the UDF environment), so every
+    worker a mapInArrow probe can land on afterwards has run only these
+    stages: it must have their builders and no pandas."""
     from vietnamese_ocr_spark.caching import release_persisted
+
+    words = "xin chao ban toi la nguoi viet nam hoc sinh".split()
+    pq.write_table(pa.table({
+        "doc_id": pa.array(range(8), pa.int64()),
+        "text": [" ".join(words[(i + j) % len(words)] for j in range(20)) for i in range(8)],
+    }), tmp_path / "documents.parquet")
 
     def probe(batches):
         import sys
@@ -168,6 +229,9 @@ def test_stages_keep_their_rows_and_never_load_pandas(spark):
             schema, rows = EXPECTED[name]
             assert df.schema.simpleString() == schema, name
             assert _rows(name, df) == rows, name
+        for name, (df, row_key, want) in _row_stages(spark, str(tmp_path)).items():
+            got = [r.asDict() for r in df.collect()]
+            assert want and sorted(got, key=row_key) == sorted(want, key=row_key), name
         got = spark.range(1, numPartitions=1).mapInArrow(
             probe, "pandas_loaded boolean, stages_ran boolean").collect()
     finally:
@@ -177,11 +241,11 @@ def test_stages_keep_their_rows_and_never_load_pandas(spark):
     assert [r.asDict() for r in got] == [{"pandas_loaded": False, "stages_ran": True}]
 
 
-@pytest.mark.parametrize("module", ["operators/dedup.py", "operators/textstats.py",
-                                    "operators/arrow_batch.py"])
+@pytest.mark.parametrize("module", [m for m in RUNTIME_MODULES if m not in PANDAS_MODULES])
 def test_curation_modules_never_reach_pandas(module):
-    """Static guard: these modules neither import pandas nor run a pandas
-    UDF form, so nothing they ship to a worker can load it."""
+    """Static guard: no runtime module but the streaming pair imports
+    pandas or runs a pandas UDF form, so nothing it ships to a worker can
+    load it."""
     with open(os.path.join(PKG, module), encoding="utf-8") as f:
         tree = ast.parse(f.read())
     bad = []
@@ -193,3 +257,77 @@ def test_curation_modules_never_reach_pandas(module):
         elif isinstance(node, ast.Attribute) and node.attr in ("mapInPandas", "applyInPandas"):
             bad.append(node.attr)
     assert bad == []
+
+
+def _fresh_python(code: str) -> str:
+    out = subprocess.run([sys.executable, "-c", code], capture_output=True, text=True,
+                         cwd=REPO, timeout=120)
+    assert out.returncode == 0, out.stderr[-2000:]
+    return out.stdout.strip()
+
+
+def test_runtime_modules_import_without_pandas():
+    """Importing any runtime module but the streaming pair, in a fresh
+    interpreter, leaves pandas unloaded; names the first one that loads it."""
+    mods = [
+        "vietnamese_ocr_spark." + m[:-3].replace(os.sep, ".").removesuffix(".__init__")
+        for m in RUNTIME_MODULES if m not in PANDAS_MODULES and not m.endswith("__main__.py")
+    ]
+    assert _fresh_python(
+        "import importlib, sys\n"
+        f"for m in {mods!r}:\n"
+        "    importlib.import_module(m)\n"
+        "    if 'pandas' in sys.modules:\n"
+        "        print(m)\n"
+        "        break\n"
+    ) == ""
+
+
+SPAN = StructType([StructField(n, StringType()) for n in ("kind", "text", "media_ref")]
+                  + [StructField("offset", IntegerType())])
+BUILDER_CASES = [
+    (StringType(), ["xin", None, "tiếng việt", ""]),
+    (BinaryType(), [b"\x89PNG", None, b"", b"\x00\xff"]),
+    (BooleanType(), [True, None, False, True]),
+    (IntegerType(), [1, None, -7, 2**31 - 1]),
+    (LongType(), [None, 2**40, 0, -1]),
+    (FloatType(), [0.1, None, -2.5, 1e30]),
+    (DoubleType(), [None, 0.1, -0.0, 1e300]),
+    (ArrayType(FloatType()), [[0.5, None], None, [], [1.25, 3.0]]),
+    (ArrayType(StringType()), [None, ["a", None, ""], [], ["tiếng"]]),
+    (ArrayType(BinaryType()), [[b"\x01", b""], [], None, [None]]),
+    (ArrayType(SPAN), [
+        [{"kind": "text", "text": "a", "media_ref": "", "offset": 1}, None],
+        [],
+        None,
+        # a key the struct does not name is ignored, a missing one is NULL
+        [{"kind": "media", "text": "", "media_ref": "m#1", "_truth": "x"}],
+    ]),
+]
+
+
+@pytest.mark.parametrize("spark_type, values", BUILDER_CASES,
+                         ids=[t.simpleString() for t, _ in BUILDER_CASES])
+def test_column_builder_matches_pa_array(spark_type, values):
+    """column() over Python values equals pyarrow's own conversion of them
+    to the type Spark derives for a DDL type; NULLs, empty lists and
+    NULL list items included."""
+    arrow_type = to_arrow_type(spark_type)
+    got = column(values, arrow_type)
+    got.validate(full=True)
+    assert got.type == arrow_type
+    assert got.equals(pa.array(values, arrow_type))
+
+
+def test_column_builder_never_loads_pandas():
+    """pa.array() would import pandas; column() over every builder case
+    must not."""
+    assert _fresh_python(
+        "import sys\n"
+        "from pyspark.sql.pandas.types import to_arrow_type\n"
+        "from tests.test_curation_arrow import BUILDER_CASES\n"
+        "from vietnamese_ocr_spark.operators.arrow_batch import column\n"
+        "for t, values in BUILDER_CASES:\n"
+        "    column(values, to_arrow_type(t)).validate(full=True)\n"
+        "print('pandas' in sys.modules)\n"
+    ) == "False"

@@ -113,6 +113,9 @@ def test_codec_registration_reanchors_pipeline(spark):
         k = (len(payload) % 7) + 1
         return (np.arange(n_samples, dtype=np.float32) % 101) * np.float32(0.01 * k)
 
+    from vietnamese_ocr_spark.operators import multimodal
+
+    real_wav = multimodal._AUDIO_CODECS["audio/wav"]
     register_codec("audio/wav", ramp_pcm, kind="audio")
     try:
         rows = [
@@ -131,9 +134,7 @@ def test_codec_registration_reanchors_pipeline(spark):
             assert got[f"wav-{i}"]["features_md5"] == want["features_md5"]
             assert got[f"wav-{i}"]["n_samples"] == want["n_samples"]
     finally:
-        from vietnamese_ocr_spark.operators import multimodal
-
-        multimodal._AUDIO_CODECS.pop("audio/wav", None)
+        register_codec("audio/wav", real_wav, kind="audio")
 
 
 def test_video_codec_registration(spark):

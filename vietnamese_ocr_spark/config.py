@@ -21,13 +21,15 @@ from pyspark.sql import SparkSession
 # per Python worker ~99 MB, most of it imported code (424 modules); it was
 # ~108 MB while every JPEG Huffman table a worker met stayed cached as
 # 65536 separate ints (~2.5 MB a table), ~147 MB while the stage was
-# mapInPandas and its workers imported pandas (761 modules), ~163 MB when
+# a pandas UDF and its workers imported pandas (761 modules), ~163 MB when
 # every canvas of a batch was also held until recognition. The
 # Python-level allocations of one 1024-payload batch peak at ~2.5 MiB,
 # more when it carries a large multi-line image, whose decoded frame
 # dominates. The curation stages (dedup signatures, the LM bigram pass)
 # run through mapInArrow too: on the curate_queries benchmark (local[3]) a
-# worker peaks at ~114 MB, ~140 MB while they were mapInPandas.
+# worker peaks at ~114 MB, ~140 MB while they were pandas UDFs. Every
+# other batch Python stage is mapInArrow (or applyInArrow) as well; only
+# the two streaming dedup stages still run pandas UDFs.
 ARROW_MAX_RECORDS = 1024
 
 

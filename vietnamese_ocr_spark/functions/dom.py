@@ -11,7 +11,7 @@ element is scored by its own direct text and the link density of its
 subtree — the classic DOM-heuristic readability recipe.
 
 Pure Python on purpose: a DOM cannot be expressed in Catalyst
-expressions, so the Spark surface is an Arrow-batched mapInPandas stage
+expressions, so the Spark surface is an Arrow-batched mapInArrow stage
 (operators/textstats.py dom_main_content_stage) — the sanctioned
 escape hatch, never per-row Python UDFs. The parser is deliberately
 tolerant (unclosed tags, stray closers, attribute soup) because crawl

@@ -24,10 +24,13 @@ from __future__ import annotations
 import hashlib
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
+from .arrow_batch import rows_batch
 from .reshuffle import shuffle_key
 
 BATCH_DDL = (
@@ -51,12 +54,13 @@ def pad_stack_batches(media: DataFrame, batch_size: int = 32,
         F.row_number().over(w).alias("_rank"),
     )
     withpng = ranked.join(media.select("media_ref", "png"), "media_ref")
+    schema = to_arrow_schema(StructType.fromDDL(BATCH_DDL))
 
-    def collate(pdf: pd.DataFrame) -> pd.DataFrame:
+    def collate(group: pa.Table) -> pa.Table:
         from ..functions.imaging import decode_image
 
-        grp = pdf.sort_values("_rank")
-        imgs = [decode_image(bytes(p)) for p in grp["png"]]
+        grp = group.sort_by("_rank")
+        imgs = [decode_image(p) for p in grp.column("png").to_pylist()]
         h = max(im.shape[0] for im in imgs)
         max_w = max(im.shape[1] for im in imgs)
         stacked = np.zeros((len(imgs), h, max_w), dtype=np.uint8)
@@ -64,21 +68,18 @@ def pad_stack_batches(media: DataFrame, batch_size: int = 32,
         for i, im in enumerate(imgs):
             stacked[i, : im.shape[0], : im.shape[1]] = im
             pad_cells += h * max_w - im.shape[0] * im.shape[1]
-        return pd.DataFrame(
-            [
-                {
-                    "batch_id": int(grp["batch_id"].iloc[0]),
-                    "n": len(imgs),
-                    "height": h,
-                    "max_width": max_w,
-                    "pad_cells": pad_cells,
-                    "tensor_md5": hashlib.md5(stacked.tobytes()).hexdigest(),
-                }
-            ]
-        )
+        row = {
+            "batch_id": grp.column("batch_id").to_pylist()[0],
+            "n": len(imgs),
+            "height": h,
+            "max_width": max_w,
+            "pad_cells": pad_cells,
+            "tensor_md5": hashlib.md5(stacked.tobytes()).hexdigest(),
+        }
+        return pa.Table.from_batches([rows_batch([row], schema)])
 
-    # applyInPandas, NOT mapInPandas: a group must reach its collate
-    # whole (Arrow chunking inside mapInPandas could split a batch);
-    # the groupBy is the one shuffle, keyed on batch_id, so each task
-    # collates complete batches
-    return withpng.groupBy("batch_id").applyInPandas(collate, BATCH_DDL)
+    # applyInArrow, NOT mapInArrow: a group must reach its collate whole
+    # (Arrow chunking inside mapInArrow could split a batch); the groupBy
+    # is the one shuffle, keyed on batch_id, so each task collates
+    # complete batches
+    return withpng.groupBy("batch_id").applyInArrow(collate, BATCH_DDL)

@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .arrow_batch import map_rows
+
 END = "</w>"  # end-of-word marker, standard BPE
 
 
@@ -208,36 +210,25 @@ def bpe_segment(docs: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Apply learned merges to the corpus: (doc_id, text) -> (doc_id,
     tokens, n_tokens). Encode-time BPE is inherently per-word sequential
     (lowest-rank-first), so this is the sanctioned Arrow-batched
-    mapInPandas escape hatch; a per-batch word cache exploits Zipf (each
-    distinct word is segmented once per batch, not once per occurrence).
+    mapInArrow escape hatch; a per-task word cache exploits Zipf (each
+    distinct word is segmented once per task, not once per occurrence).
     The merges list rides the closure to every worker — it is the small
     trained artifact, exactly like broadcast model weights."""
-    import pandas as pd
-
     ranks = {pair: i for i, pair in enumerate(merges)}
+    cache: dict[str, list[str]] = {}  # unpickled empty by every task
 
-    def stage(batches):
-        for pdf in batches:
-            cache: dict[str, list[str]] = {}
-            toks_col = []
-            for text in pdf["text"]:
-                toks: list[str] = []
-                for w in text.split(" "):
-                    if not w:
-                        continue
-                    got = cache.get(w)
-                    if got is None:
-                        got = cache[w] = bpe_segment_word(w, ranks)
-                    toks.extend(got)
-                toks_col.append(toks)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "tokens": toks_col,
-                    "n_tokens": [len(t) for t in toks_col],
-                }
-            )
+    def rows(doc_id, text):
+        toks: list[str] = []
+        for w in text.split(" "):
+            if not w:
+                continue
+            got = cache.get(w)
+            if got is None:
+                got = cache[w] = bpe_segment_word(w, ranks)
+            toks.extend(got)
+        return [{"doc_id": doc_id, "tokens": toks, "n_tokens": len(toks)}]
 
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
-    ).mapInPandas(stage, "doc_id string, tokens array<string>, n_tokens int")
+    return map_rows(
+        docs.select(F.col("doc_id").cast("string").alias("doc_id"), "text"),
+        rows, "doc_id string, tokens array<string>, n_tokens int",
+    )

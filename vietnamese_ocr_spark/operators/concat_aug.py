@@ -12,20 +12,18 @@ rotation, keeping every geometric op deterministic (SURVEY §7
 runs and cluster sizes.
 
 Scale shape: pairing is one narrow shuffle (the seeded sort), the image
-work is one mapInPandas over Arrow batches — payloads never enter a
+work is one mapInArrow over Arrow batches — payloads never enter a
 groupBy, and each output row is built from exactly two input rows.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.imaging import invert, png_decode, png_encode, resize_bilinear
+from .arrow_batch import map_rows
 from .reshuffle import shuffle_key
 
 CONCAT_AUG_DDL = "pair_id string, png binary, label string, width int, height int"
@@ -70,25 +68,15 @@ def concat_aug_images(labeled_media: DataFrame, seed: int = 42) -> DataFrame:
     )
     paired = id_pairs.join(left, "media_ref").join(right, "ref2")
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for r1, p1, t1, r2, p2, t2 in zip(
-                pdf["media_ref"], pdf["png"], pdf["text"],
-                pdf["ref2"], pdf["png2"], pdf["text2"],
-            ):
-                img = concat_two(png_decode(p1), png_decode(p2))
-                rows.append(
-                    {
-                        "pair_id": f"{r1}+{r2}",
-                        "png": png_encode(img),
-                        "label": f"{t1}{t2}",  # no separator, concat_aug.py:42
-                        "width": img.shape[1],
-                        "height": img.shape[0],
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["pair_id", "png", "label", "width", "height"])
+    def rows(r1, p1, t1, r2, p2, t2):
+        img = concat_two(png_decode(p1), png_decode(p2))
+        return [{
+            "pair_id": f"{r1}+{r2}",
+            "png": png_encode(img),
+            "label": f"{t1}{t2}",  # no separator, concat_aug.py:42
+            "width": img.shape[1],
+            "height": img.shape[0],
+        }]
 
-    return paired.select(
-        "media_ref", "png", "text", "ref2", "png2", "text2"
-    ).mapInPandas(stage, CONCAT_AUG_DDL)
+    pairs = paired.select("media_ref", "png", "text", "ref2", "png2", "text2")
+    return map_rows(pairs, rows, CONCAT_AUG_DDL)

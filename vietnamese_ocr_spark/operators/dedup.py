@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 # for consumers that think in dedup terms
 from ..caching import persist_tracked as _persist_tracked  # noqa: E402
 from ..caching import release_persisted  # noqa: E402,F401
-from .arrow_batch import arrow_column, binary_list_column, string_column, take
+from .arrow_batch import BINARY_LIST, arrow_column, column, string_column, take
 
 
 def _words():
@@ -126,7 +126,7 @@ def shingle_digest_docs(docs: DataFrame, shingle_n: int = 3) -> DataFrame:
                 )
                 arrs.append([md5(s.encode()).digest() for s in seen])
             yield pa.RecordBatch.from_arrays(
-                [batch.column("doc_id"), binary_list_column(arrs)], names=["doc_id", "sarr"]
+                [batch.column("doc_id"), column(arrs, BINARY_LIST)], names=["doc_id", "sarr"]
             )
 
     return _spread(docs).select("doc_id", "text").mapInArrow(gen, schema)

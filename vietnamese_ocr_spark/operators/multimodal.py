@@ -29,13 +29,12 @@ Asset table schema:
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 
 from ..functions.imaging import decode_image, png_encode, resize_bilinear
+from .arrow_batch import map_rows
 
 ASSETS_DDL = (
     "asset_id string, kind string, mime string, payload binary, "
@@ -67,7 +66,7 @@ def _require_mime(mime: str, supported: tuple[str, ...]) -> None:
 # stage: audio codecs are (payload: bytes, n_samples: int) -> float32 PCM,
 # video codecs are (payload: bytes, frame_idx: int) -> phash str. Stages
 # SNAPSHOT the registry at DataFrame-construction time and ship it inside
-# the mapInPandas closure — a worker process never sees the driver's module
+# the stage's closure — a worker process never sees the driver's module
 # globals, so late registration on the driver must travel by value.
 
 _AUDIO_CODECS: dict[str, object] = {}
@@ -103,41 +102,31 @@ def image_stats(img: np.ndarray) -> dict:
 def image_features(assets: DataFrame) -> DataFrame:
     """Decode + per-image stats; real PNG path, vectorized per Arrow batch."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, mime, payload in zip(pdf["asset_id"], pdf["mime"], pdf["payload"]):
-                _require_mime(mime, ("image/png", "image/jpeg"))
-                rows.append({"asset_id": asset_id, **image_stats(decode_image(payload))})
-            yield pd.DataFrame(rows)
+    def rows(asset_id, mime, payload):
+        _require_mime(mime, ("image/png", "image/jpeg"))
+        return [{"asset_id": asset_id, **image_stats(decode_image(payload))}]
 
-    return assets.filter("kind = 'image'").select("asset_id", "mime", "payload").mapInPandas(
-        stage, IMAGE_FEATURES_DDL
-    )
+    images = assets.filter("kind = 'image'").select("asset_id", "mime", "payload")
+    return map_rows(images, rows, IMAGE_FEATURES_DDL)
 
 
 def image_resize(assets: DataFrame, out_h: int, out_w: int) -> DataFrame:
     """Real decode -> bilinear resize -> re-encode; binary in, binary out."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, mime, payload in zip(pdf["asset_id"], pdf["mime"], pdf["payload"]):
-                _require_mime(mime, ("image/png", "image/jpeg"))
-                img = resize_bilinear(decode_image(payload), out_h, out_w)
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        "payload": png_encode(img),
-                        "width": out_w,
-                        "height": out_h,
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def rows(asset_id, mime, payload):
+        _require_mime(mime, ("image/png", "image/jpeg"))
+        img = resize_bilinear(decode_image(payload), out_h, out_w)
+        return [
+            {
+                "asset_id": asset_id,
+                "payload": png_encode(img),
+                "width": out_w,
+                "height": out_h,
+            }
+        ]
 
-    return assets.filter("kind = 'image'").select("asset_id", "mime", "payload").mapInPandas(
-        stage, RESIZED_DDL
-    )
+    images = assets.filter("kind = 'image'").select("asset_id", "mime", "payload")
+    return map_rows(images, rows, RESIZED_DDL)
 
 
 # -- audio: STUBBED decode, real plumbing ------------------------------------
@@ -186,26 +175,19 @@ def audio_features(assets: DataFrame, frame: int = 512) -> DataFrame:
 
     codecs = dict(_AUDIO_CODECS)  # snapshot: rides the closure to workers
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, mime, payload, sr, dur in zip(
-                pdf["asset_id"], pdf["mime"], pdf["payload"],
-                pdf["sample_rate"], pdf["duration_ms"],
-            ):
-                _require_mime(mime, tuple(codecs))
-                rows.append(
-                    {
-                        "asset_id": asset_id,
-                        **audio_feature_row(payload, sr, dur, frame,
-                                            decode=codecs[mime]),
-                    }
-                )
-            yield pd.DataFrame(rows)
+    def rows(asset_id, mime, payload, sr, dur):
+        _require_mime(mime, tuple(codecs))
+        return [
+            {
+                "asset_id": asset_id,
+                **audio_feature_row(payload, sr, dur, frame, decode=codecs[mime]),
+            }
+        ]
 
-    return assets.filter("kind = 'audio'").select(
+    audio = assets.filter("kind = 'audio'").select(
         "asset_id", "mime", "payload", "sample_rate", "duration_ms"
-    ).mapInPandas(stage, AUDIO_FEATURES_DDL)
+    )
+    return map_rows(audio, rows, AUDIO_FEATURES_DDL)
 
 
 # -- video: STUBBED decode, real plumbing ------------------------------------
@@ -227,27 +209,20 @@ def video_frame_sample(assets: DataFrame, every_nth: int = 10) -> DataFrame:
 
     codecs = dict(_VIDEO_CODECS)  # snapshot: rides the closure to workers
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for asset_id, mime, payload, n_frames in zip(
-                pdf["asset_id"], pdf["mime"], pdf["payload"], pdf["n_frames"]
-            ):
-                _require_mime(mime, tuple(codecs))
-                decode = codecs[mime]
-                for idx in range(0, int(n_frames), every_nth):
-                    rows.append(
-                        {
-                            "asset_id": asset_id,
-                            "frame_idx": idx,
-                            "phash": decode(payload, idx),
-                        }
-                    )
-            yield pd.DataFrame(rows)
+    def rows(asset_id, mime, payload, n_frames):
+        _require_mime(mime, tuple(codecs))
+        decode = codecs[mime]
+        return [
+            {
+                "asset_id": asset_id,
+                "frame_idx": idx,
+                "phash": decode(payload, idx),
+            }
+            for idx in range(0, int(n_frames), every_nth)
+        ]
 
-    return assets.filter("kind = 'video'").select(
-        "asset_id", "mime", "payload", "n_frames"
-    ).mapInPandas(stage, FRAME_SAMPLE_DDL)
+    videos = assets.filter("kind = 'video'").select("asset_id", "mime", "payload", "n_frames")
+    return map_rows(videos, rows, FRAME_SAMPLE_DDL)
 
 
 # -- decode-coverage stats (round-4): every format the ingest accepts ---------
@@ -280,21 +255,9 @@ def image_decode_stats(assets: DataFrame) -> DataFrame:
     The scan ships payload bytes into ONE Arrow-batched stage and returns
     scalars only — binaries never enter a shuffle."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                [
-                    decode_stats_row(a, f, p)
-                    for a, f, p in zip(pdf["asset_id"], pdf["fmt"], pdf["payload"])
-                ],
-                columns=[
-                    "asset_id", "fmt", "decode_ok",
-                    "width", "height", "mean_lum", "ink_ratio",
-                ],
-            )
-
-    return assets.select("asset_id", "fmt", "payload").mapInPandas(
-        stage, DECODE_STATS_DDL
+    return map_rows(
+        assets.select("asset_id", "fmt", "payload"),
+        lambda *row: [decode_stats_row(*row)], DECODE_STATS_DDL,
     )
 
 

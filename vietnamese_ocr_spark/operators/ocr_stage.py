@@ -99,7 +99,7 @@ def _ocr_batch(batch: pa.RecordBatch, rec: Recognizer, part_id: int) -> pa.Recor
 def make_ocr_stage(weights_bc):
     """Returns the mapInArrow function closure over the weights broadcast.
 
-    A pandas frame fed to it (a mapInPandas caller) is converted to a
+    A pandas frame fed to it (a pandas-UDF caller) is converted to a
     RecordBatch on the way in and its output back to pandas on the way out;
     only such callers pay for, and load, pandas."""
 

@@ -14,10 +14,9 @@ functions/pdf.py's module docstring for the current scope.)"""
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from .arrow_batch import map_rows
 
 PDF_LINES_DDL = (
     "asset_id string, decode_ok boolean, page int, line_no int, "
@@ -49,17 +48,7 @@ def pdf_extract_lines(assets: DataFrame) -> DataFrame:
     Payload bytes enter exactly one Arrow-batched stage; only scalar
     line rows come out — PDFs never cross a shuffle."""
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                rows.extend(pdf_line_rows(asset_id, payload))
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "decode_ok", "page", "line_no", "y", "text"],
-            )
-
-    return assets.select("asset_id", "payload").mapInPandas(stage, PDF_LINES_DDL)
+    return map_rows(assets.select("asset_id", "payload"), pdf_line_rows, PDF_LINES_DDL)
 
 
 # -- scanned-document OCR (round-5) -------------------------------------------
@@ -108,17 +97,14 @@ def pdf_scanned_ocr(assets: DataFrame, weights_bc=None) -> DataFrame:
 
         weights_bc = broadcast_weights(assets.sparkSession)
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from .ocr_stage import _hydrate
+    recognizer = None
 
-        recognizer = _hydrate(weights_bc)
-        for pdf in batches:
-            rows: list[dict] = []
-            for asset_id, payload in zip(pdf["asset_id"], pdf["payload"]):
-                rows.extend(scanned_ocr_rows(asset_id, payload, recognizer))
-            yield pd.DataFrame(
-                rows,
-                columns=["asset_id", "page", "name", "rec_text", "n_tokens"],
-            )
+    def rows(asset_id, payload):
+        nonlocal recognizer
+        if recognizer is None:  # once per task: the closure is per task
+            from .ocr_stage import _hydrate
 
-    return assets.select("asset_id", "payload").mapInPandas(stage, SCANNED_OCR_DDL)
+            recognizer = _hydrate(weights_bc)
+        return scanned_ocr_rows(asset_id, payload, recognizer)
+
+    return map_rows(assets.select("asset_id", "payload"), rows, SCANNED_OCR_DDL)

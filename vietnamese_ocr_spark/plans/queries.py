@@ -461,7 +461,7 @@ def q_pdf_scanned_ocr(spark, sf):
 
 def q_multimodal_audio_features(spark, sf):
     """Stub-decoded audio assets derived deterministically from documents;
-    exercises the framed-feature mapInPandas plumbing. The driver surface
+    exercises the framed-feature mapInArrow plumbing. The driver surface
     carries the scalar features_md5 digest instead of the float array —
     the canonicalizer can't hash array columns, and the digest makes the
     row value-checkable against the single-process golden (golden.py)."""

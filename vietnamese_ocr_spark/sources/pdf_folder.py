@@ -1,7 +1,7 @@
 """Raw PDF-directory source: point the extraction pipeline at PDFs.
 
 The binaryFile data source scans the directory tree in parallel (glob
-pushed to the listing, one task per file split); a mapInPandas stage
+pushed to the listing, one task per file split); a mapInArrow stage
 parses each PDF with the pure-stdlib parser (functions/pdf.py), rebuilds
 reading order from layout, and emits one document per file in the
 input_hint shape — each reconstructed line becomes a text span with its
@@ -25,11 +25,10 @@ contract as image decode.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.arrow_batch import map_rows
 
 DOCUMENTS_SCHEMA = (
     "doc_id string, "
@@ -100,17 +99,11 @@ def read_pdf_folder(spark: SparkSession, directory: str, glob: str = "*.pdf") ->
 
     doc_id = file base name (the per-file keying the reference uses for
     its inputs, src/utils/inference.py:105-111)."""
-    raw = _raw_files(spark, directory, glob)
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                spans, _ = _pdf_doc(doc_id, bytes(content))
-                rows.append({"doc_id": doc_id, "spans": spans})
-            yield pd.DataFrame(rows, columns=["doc_id", "spans"])
-
-    return raw.mapInPandas(parse, DOCUMENTS_SCHEMA)
+    return map_rows(
+        _raw_files(spark, directory, glob),
+        lambda doc_id, content: [{"doc_id": doc_id, "spans": _pdf_doc(doc_id, content)[0]}],
+        DOCUMENTS_SCHEMA,
+    )
 
 
 def read_pdf_media(spark: SparkSession, directory: str, glob: str = "*.pdf") -> DataFrame:
@@ -118,14 +111,7 @@ def read_pdf_media(spark: SparkSession, directory: str, glob: str = "*.pdf") -> 
     image payloads the media spans emitted by read_pdf_folder reference.
     Same scan, same pure derivation — mutually consistent with the
     documents pass without any shuffle or driver state."""
-    raw = _raw_files(spark, directory, glob)
-
-    def extract_media(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, content in zip(pdf["doc_id"], pdf["content"]):
-                _, media = _pdf_doc(doc_id, bytes(content))
-                rows.extend(media)
-            yield pd.DataFrame(rows, columns=["media_ref", "png", "size_b"])
-
-    return raw.mapInPandas(extract_media, MEDIA_SCHEMA)
+    return map_rows(
+        _raw_files(spark, directory, glob),
+        lambda doc_id, content: _pdf_doc(doc_id, content)[1], MEDIA_SCHEMA,
+    )

@@ -3,7 +3,7 @@ TPC-H-ish `documents` table (doc_id, text, ...).
 
 The driver's testdata has no spans/media tables, so the flagship OCR
 pipeline demo derives one deterministically from (doc_id, text) — all
-generation runs INSIDE executors via mapInPandas (each task renders its own
+generation runs INSIDE executors via mapInArrow (each task renders its own
 PNG payloads), i.e. corpus synthesis itself is distributed and would scale
 with the cluster. Both passes (spans view, media view) recompute the same
 pure derivation, so they are mutually consistent without any shuffle or
@@ -12,14 +12,12 @@ driver-side state.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.imaging import png_encode
 from ..model.glyphs import build_atlas, render_line
 from ..model.vocab import Vocabulary
+from ..operators.arrow_batch import map_rows
 
 SPANS_SCHEMA = (
     "doc_id string, "
@@ -72,6 +70,11 @@ def _derive(doc_id: int, text: str) -> list[dict]:
     return spans
 
 
+def _optional(asset_fn):
+    """A row function over an asset function that may return None."""
+    return lambda doc_id, text: [a] if (a := asset_fn(doc_id, text)) is not None else []
+
+
 def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents scan, re-spread across the cluster: the sf parquet is a
     single file (1 input split), so without a repartition every derivation
@@ -85,47 +88,37 @@ def _base(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def derive_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _base(spark, sf_dir)
+    # a span's "_truth"/"_height" keys are not span fields, so they drop out
+    return map_rows(
+        _base(spark, sf_dir),
+        lambda doc_id, text: [{"doc_id": f"sfdoc-{doc_id:08d}", "spans": _derive(doc_id, text)}],
+        SPANS_SCHEMA,
+    )
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                spans = [
-                    {k: v for k, v in s.items() if not k.startswith("_")}
-                    for s in _derive(int(doc_id), text)
-                ]
-                out.append({"doc_id": f"sfdoc-{int(doc_id):08d}", "spans": spans})
-            yield pd.DataFrame(out)
 
-    return base.mapInPandas(gen, SPANS_SCHEMA)
+def _media_rows(doc_id: int, text: str) -> list[dict]:
+    """One document's media spans, rendered and PNG-encoded."""
+    atlas, _ = _atlas()
+    rows = []
+    for s in _derive(doc_id, text):
+        if s["kind"] != "media":
+            continue
+        img = render_line(s["_truth"], s["_height"], atlas)
+        png = png_encode(img)
+        rows.append(
+            {
+                "media_ref": s["media_ref"],
+                "png": png,
+                "width": img.shape[1],
+                "height": img.shape[0],
+                "size_b": len(png),
+            }
+        )
+    return rows
 
 
 def derive_media(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _base(spark, sf_dir)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        atlas, _ = _atlas()
-        for pdf in batches:
-            rows = []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                for s in _derive(int(doc_id), text):
-                    if s["kind"] != "media":
-                        continue
-                    img = render_line(s["_truth"], s["_height"], atlas)
-                    png = png_encode(img)
-                    rows.append(
-                        {
-                            "media_ref": s["media_ref"],
-                            "png": png,
-                            "width": img.shape[1],
-                            "height": img.shape[0],
-                            "size_b": len(png),
-                        }
-                    )
-            yield pd.DataFrame(rows)
-
-    return base.mapInPandas(gen, MEDIA_SCHEMA)
+    return map_rows(_base(spark, sf_dir), _media_rows, MEDIA_SCHEMA)
 
 
 # -- mixed-format image assets (round-4: decode coverage surface) -------------
@@ -287,18 +280,7 @@ def mixed_asset(doc_id: int, text: str) -> dict | None:
 
 
 def derive_mixed_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _base(spark, sf_dir)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                a
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-                if (a := mixed_asset(int(doc_id), text)) is not None
-            ]
-            yield pd.DataFrame(rows, columns=["asset_id", "fmt", "payload"])
-
-    return base.mapInPandas(gen, MIXED_ASSETS_SCHEMA)
+    return map_rows(_base(spark, sf_dir), _optional(mixed_asset), MIXED_ASSETS_SCHEMA)
 
 
 # -- deterministic PDF assets (round-4: the PDF/layout-parse surface) ---------
@@ -370,18 +352,7 @@ def pdf_asset(doc_id: int, text: str) -> dict | None:
 
 
 def derive_pdf_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _base(spark, sf_dir)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                a
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-                if (a := pdf_asset(int(doc_id), text)) is not None
-            ]
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return base.mapInPandas(gen, PDF_ASSETS_SCHEMA)
+    return map_rows(_base(spark, sf_dir), _optional(pdf_asset), PDF_ASSETS_SCHEMA)
 
 
 # -- scanned-PDF assets (round-5: the scanned-document OCR surface) -----------
@@ -415,15 +386,4 @@ def scanned_pdf_asset(doc_id: int, text: str) -> dict | None:
 
 
 def derive_scanned_pdf_assets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    base = _base(spark, sf_dir)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                a
-                for doc_id, text in zip(pdf["doc_id"], pdf["text"])
-                if (a := scanned_pdf_asset(int(doc_id), text)) is not None
-            ]
-            yield pd.DataFrame(rows, columns=["asset_id", "payload"])
-
-    return base.mapInPandas(gen, SCANNED_PDF_SCHEMA)
+    return map_rows(_base(spark, sf_dir), _optional(scanned_pdf_asset), SCANNED_PDF_SCHEMA)

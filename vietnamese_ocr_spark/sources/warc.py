@@ -8,7 +8,7 @@ a CRLF CRLF separator. Crawl archives store one gzip MEMBER per record
 boundaries; Python's zlib handles concatenated members incrementally.
 
 Spark shape: `binaryFile` scans a directory of .warc/.warc.gz files in
-parallel (one task per file) and a mapInPandas stage parses records and
+parallel (one task per file) and a mapInArrow stage parses records and
 emits one row per `response` record: (warc_file, record_id, target_uri,
 http_status, content_type, body). HTTP headers are stripped from
 response payloads; the body then feeds the SAME html/main-content
@@ -29,10 +29,11 @@ from __future__ import annotations
 
 import gzip
 import io
-from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ..operators.arrow_batch import map_rows
 
 WARC_DDL = (
     "warc_file string, record_id string, target_uri string, "
@@ -189,7 +190,7 @@ def read_warc_folder(
     """Directory of .warc/.warc.gz -> one row per HTTP response record.
 
     binaryFile gives one input split per archive (the WARC unit of
-    parallelism); parsing runs in-executor via mapInPandas.
+    parallelism); parsing runs in-executor via mapInArrow.
 
     Each archive is held whole in one task, so per-task memory is
     bounded by archive size. `max_archive_bytes` (default 8 GiB —
@@ -198,8 +199,6 @@ def read_warc_folder(
     risking an executor OOM; the filter rides binaryFile's `length`
     column, which is pushed down to the file listing, so an oversized
     archive's bytes are never read at all."""
-    import pandas as pd
-
     listing = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.{warc,warc.gz}")
@@ -211,17 +210,10 @@ def read_warc_folder(
         .select("path", "content")
     )
 
-    def stage(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        cols = ["warc_file", "record_id", "target_uri", "http_status",
-                "content_type", "decode_ok", "body"]
-        for pdf in batches:
-            rows: list[dict] = []
-            for path, content in zip(pdf["path"], pdf["content"]):
-                name = str(path).rsplit("/", 1)[-1]
-                rows.extend(warc_response_rows(name, bytes(content)))
-            yield pd.DataFrame(rows, columns=cols)
-
-    parsed = raw.mapInPandas(stage, WARC_DDL)
+    parsed = map_rows(
+        raw, lambda path, content: warc_response_rows(path.rsplit("/", 1)[-1], content),
+        WARC_DDL,
+    )
     oversized = (
         listing.filter(F.col("length") > max_archive_bytes)
         .select(
