@@ -19,7 +19,7 @@ run time — no results or intermediates are persisted across bench runs
 exactly like the testdata itself).
 
 Usage:  python bench_scaleup.py [out_dir]
-then:   SPARK_GRAFT_SF_DIR=/tmp/vos_scaleup_10x python bench_extra.py time <query> ...
+then:   SPARK_GRAFT_SF_DIR=/tmp/vos_scaleup_10x python bench.py --isolate <query>
 """
 
 from __future__ import annotations

@@ -12,15 +12,13 @@ parallelism levels share nothing. Results land in BENCH/BASELINE.md.
 Usage:  python bench_scaling.py [--docs 20000]
         python bench_scaling.py --skew [--docs 10000]
         python bench_scaling.py --measure <cpus> <corpus_dir>   (internal)
-        python bench_scaling.py --measure-skew <cpus> <corpus> <mode> (internal)
 
---skew (round-4, SURVEY §7 hard-point d): builds a whale corpus (1% of
-docs carry 100-150 max-height media spans — ~100x the media payload of a
-typical doc), then measures the OCR stage's per-task times under three
-partitionings (none = scan order, hash = by media_ref, salted = the
-production size-bucket x salt shuffle) and runs the 2->8 ladder on the
-skewed corpus. Writes the evidence in place of BENCH/BASELINE.md's
-whale-skew section, keeping the ladder part above it.
+--skew (round-4, SURVEY §7 hard-point d): runs the 2->8 ladder on a whale
+corpus (1% of docs carry 100-150 max-height media spans — ~100x the media
+payload of a typical doc) and writes it in place of BENCH/BASELINE.md's
+whale-skew section, keeping the ladder part above it. The OCR stage's
+per-task balance on a whale corpus is reported by perfbench's traced run
+(ocr_stage.straggler_ratio, ocr_stage.task_cv).
 """
 
 from __future__ import annotations
@@ -29,140 +27,73 @@ import json
 import os
 import subprocess
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+from bench import bench_session, time_flagship
 
-CACHE = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".cache")
+HERE = os.path.dirname(os.path.abspath(__file__))
+CACHE = os.path.join(HERE, ".cache")
+BASELINE_MD = os.path.join(HERE, "BENCH", "BASELINE.md")
+SKEW_HEADER = "\n## Whale-skew proof"
+WHALES = {"whale_frac": 0.01, "whale_spans": (100, 151)}
 
 
 def measure(cpus: int, corpus_dir: str) -> dict:
-    from vietnamese_ocr_spark.config import get_spark
-    from vietnamese_ocr_spark.plans.extract import broadcast_weights, extract_df
+    from vietnamese_ocr_spark.plans.extract import broadcast_weights
 
-    spark = get_spark(f"scale-{cpus}", master=f"local[{cpus}]", shuffle_partitions=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    documents = spark.read.parquet(f"{corpus_dir}/documents.parquet")
-    media = spark.read.parquet(f"{corpus_dir}/media.parquet")
-    n_docs = documents.count()  # also warms the JVM/scan
-    weights_bc = broadcast_weights(spark)
-
-    # warm the Python workers (numpy/pyarrow import + weight hydration is a
-    # per-worker one-off that amortizes to zero on a long-running cluster)
-    warm_docs = documents.limit(512)
-    warm, _ = extract_df(spark, warm_docs, media, weights_bc)
-    warm.write.mode("overwrite").format("noop").save()
-
-    # several timed iterations, report the BEST: the first is cold (JIT,
-    # codegen, worker spawn — amortizes to zero in the long-running-cluster
-    # regime the 10^12-doc metric describes) and this shared VM shows
-    # multi-second run-to-run noise; min-wall is the standard noise filter
-    walls = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        extracted, _ = extract_df(spark, documents, media, weights_bc)
-        extracted.write.mode("overwrite").format("noop").save()
-        walls.append(time.perf_counter() - t0)
+    with bench_session(cpus) as spark:
+        n_docs = spark.read.parquet(f"{corpus_dir}/documents.parquet").count()  # warms the JVM
+        weights_bc = broadcast_weights(spark)
+        # warm the Python workers (numpy/pyarrow import + weight hydration is
+        # a per-worker one-off that amortizes to zero on a long-running cluster)
+        time_flagship(spark, corpus_dir, weights_bc, limit=512)
+        # several timed iterations, report the BEST: the first is cold (JIT,
+        # codegen, worker spawn — amortizes to zero in the long-running-
+        # cluster regime the 10^12-doc metric describes) and this shared VM
+        # shows multi-second run-to-run noise; min-wall is the standard filter
+        walls = [time_flagship(spark, corpus_dir, weights_bc) for _ in range(3)]
     wall = min(walls[1:])
-    spark.stop()
     return {"cpus": cpus, "wall_s": round(wall, 2), "cold_wall_s": round(walls[0], 2),
             "all_walls": [round(w, 2) for w in walls],
             "docs": n_docs, "docs_per_sec": round(n_docs / wall, 2)}
 
 
-def ensure_corpus(n_docs: int) -> str:
+def ensure_corpus(n_docs: int, whales: dict | None = None) -> str:
+    """The seed-42 corpus of n_docs, with `whales` (generate_corpus's
+    whale_frac/whale_spans) shaping its skew tail if given. Whale media
+    land CONTIGUOUSLY in the media table (refs are assigned in doc order),
+    so scan-order partitions would inherit all-whale regions."""
     from vietnamese_ocr_spark.sources.fixtures import generate_corpus
 
-    out = os.path.join(CACHE, f"bench_corpus_{n_docs}_s42")
+    name = f"bench_corpus_{'skew_' if whales else ''}{n_docs}_s42"
+    out = os.path.join(CACHE, name)
     if not os.path.exists(os.path.join(out, "media.parquet")):
-        print(f"generating {n_docs}-doc corpus -> {out}", file=sys.stderr)
-        generate_corpus(n_docs, out)
+        print(f"generating {name} -> {out}", file=sys.stderr)
+        generate_corpus(n_docs, out, **(whales or {}))
     return out
 
 
-def ensure_skewed_corpus(n_docs: int) -> str:
-    """1% whale docs with 100-150 max-height media spans each: the whale
-    media land CONTIGUOUSLY in the media table (refs are assigned in doc
-    order), so scan-order partitions inherit all-whale regions — the
-    skew shape the salted repartition exists to kill."""
-    from vietnamese_ocr_spark.sources.fixtures import generate_corpus
-
-    out = os.path.join(CACHE, f"bench_corpus_skew_{n_docs}_s42")
-    if not os.path.exists(os.path.join(out, "media.parquet")):
-        print(f"generating skewed {n_docs}-doc corpus -> {out}", file=sys.stderr)
-        generate_corpus(n_docs, out, whale_frac=0.01, whale_spans=(100, 151))
-    return out
-
-
-def measure_skew(cpus: int, corpus_dir: str, mode: str) -> dict:
-    """Per-task wall times of the REAL OCR stage (make_ocr_stage) under a
-    chosen pre-stage partitioning. The probe wraps the production stage
-    closure in mapInArrow, as recognize_media_df runs it, and emits one
-    (part_id, n_media, elapsed) row per task."""
-    from vietnamese_ocr_spark.config import get_spark
-    from vietnamese_ocr_spark.operators.arrow_batch import arrow_column
-    from vietnamese_ocr_spark.operators.ocr_stage import make_ocr_stage, salted_repartition
-    from vietnamese_ocr_spark.plans.extract import broadcast_weights
-
-    spark = get_spark(f"skew-{cpus}-{mode}", master=f"local[{cpus}]",
-                      shuffle_partitions=cpus)
-    spark.sparkContext.setLogLevel("ERROR")
-    media = spark.read.parquet(f"{corpus_dir}/media.parquet").select(
-        "media_ref", "png", "size_b"
+def measure_subproc(cpus: int, corpus: str) -> dict:
+    out = subprocess.run(
+        [sys.executable, os.path.abspath(__file__), "--measure", str(cpus), corpus],
+        capture_output=True, text=True, check=True,
     )
-    if mode == "salted":
-        balanced = salted_repartition(media, cpus)
-    elif mode == "hash":
-        balanced = media.repartition(cpus, "media_ref")
-    elif mode == "none":
-        balanced = media  # scan-order partitions (file splits)
-    else:
-        raise ValueError(mode)
-    stage = make_ocr_stage(broadcast_weights(spark))
-
-    def probe(batches):
-        import numpy as np
-        import pyarrow as pa
-        from pyspark import TaskContext
-
-        t0 = time.perf_counter()
-        n = 0
-        for out in stage(batches):
-            n += out.num_rows
-        elapsed = time.perf_counter() - t0
-        yield pa.RecordBatch.from_arrays(
-            [arrow_column(np.array([TaskContext.get().partitionId()], np.int32)),
-             arrow_column(np.array([n], np.int64)),
-             arrow_column(np.array([elapsed]))],
-            names=["part_id", "n_media", "elapsed"],
-        )
-
-    probed = balanced.mapInArrow(probe, "part_id int, n_media long, elapsed double")
-    probed.write.mode("overwrite").format("noop").save()  # warm workers/JIT
-    t0 = time.perf_counter()
-    rows = probed.collect()
-    wall = time.perf_counter() - t0
-    times = sorted(r["elapsed"] for r in rows)
-    counts = [r["n_media"] for r in rows]
-    med = times[len(times) // 2] if times else 0.0
-    mean = sum(times) / len(times)
-    var = sum((t - mean) ** 2 for t in times) / len(times)
-    spark.stop()
-    return {
-        "mode": mode,
-        "cpus": cpus,
-        "tasks": len(times),
-        "wall_s": round(wall, 2),
-        "task_max_s": round(times[-1], 3),
-        "task_median_s": round(med, 3),
-        "straggler_ratio": round(times[-1] / med, 2) if med > 0 else None,
-        "task_cv": round((var ** 0.5) / mean, 3) if mean > 0 else None,
-        "rows_min_max": [min(counts), max(counts)],
-    }
+    r = json.loads(out.stdout.strip().splitlines()[-1])
+    print(r, file=sys.stderr)
+    return r
 
 
-BASELINE_MD = "BENCH/BASELINE.md"
-SKEW_HEADER = "\n## Whale-skew proof"
+def run_ladder(corpus: str, n: int, n4: int) -> dict:
+    # interleave the two levels across two fresh-JVM passes and keep
+    # each level's best: this VM shows multi-second noise that drifts
+    # over minutes, which a single paired run would bake into the ratio
+    results = {n: [], n4: []}
+    for _ in range(2):
+        for cpus in (n, n4):
+            results[cpus].append(measure_subproc(cpus, corpus))
+    lo = min(results[n], key=lambda r: r["wall_s"])
+    hi = min(results[n4], key=lambda r: r["wall_s"])
+    eff = round(hi["docs_per_sec"] / lo["docs_per_sec"] / 4, 3)
+    return {"n": lo, "n4": hi, "efficiency": eff, "pass": eff >= 0.8}
 
 
 def _split_baseline() -> tuple[str, str]:
@@ -177,42 +108,12 @@ def _split_baseline() -> tuple[str, str]:
 
 
 def run_skew_suite(n_docs: int) -> int:
-    corpus = ensure_skewed_corpus(n_docs)
+    ladder = run_ladder(ensure_corpus(n_docs, WHALES), 2, 8)
+    lo, hi, eff = ladder["n"], ladder["n4"], ladder["efficiency"]
+    print(json.dumps({"metric": "2->8 ladder on a whale-skewed corpus", "docs": n_docs,
+                      "ladder_2_8": ladder}))
 
-    def sub(args: list[str]) -> dict:
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), *args],
-            capture_output=True, text=True, check=True,
-        )
-        r = json.loads(out.stdout.strip().splitlines()[-1])
-        print(r, file=sys.stderr)
-        return r
-
-    modes = {m: sub(["--measure-skew", "8", corpus, m])
-             for m in ("none", "hash", "salted")}
-    # 2->8 ladder of the FULL extraction on the skewed corpus (fresh JVMs,
-    # best-of-two interleaved passes — same protocol as the primary ladder)
-    results = {2: [], 8: []}
-    for _ in range(2):
-        for cpus in (2, 8):
-            results[cpus].append(sub(["--measure", str(cpus), corpus]))
-    lo = min(results[2], key=lambda r: r["wall_s"])
-    hi = min(results[8], key=lambda r: r["wall_s"])
-    eff = round(hi["docs_per_sec"] / lo["docs_per_sec"] / 4, 3)
-    summary = {
-        "metric": "whale-skew evidence: task balance + 2->8 ladder on skewed corpus",
-        "docs": n_docs,
-        "modes": modes,
-        "ladder_2_8": {"n": lo, "n4": hi, "efficiency": eff, "pass": eff >= 0.8},
-    }
-    print(json.dumps(summary))
-
-    os.makedirs("BENCH", exist_ok=True)
-    mode_rows = "".join(
-        f"| {m} | {v['tasks']} | {v['wall_s']} | {v['task_median_s']} "
-        f"| {v['task_max_s']} | {v['straggler_ratio']} | {v['task_cv']} |\n"
-        for m, v in modes.items()
-    )
+    os.makedirs(os.path.dirname(BASELINE_MD), exist_ok=True)
     ladder_part, _ = _split_baseline()
     with open(BASELINE_MD, "w") as f:
         f.write(
@@ -220,54 +121,27 @@ def run_skew_suite(n_docs: int) -> int:
             f"Skewed corpus: {n_docs} docs, 1% whales carrying 100-150\n"
             "max-height media spans each (~100x a typical doc's media\n"
             "payload); whale media sit contiguously in the media table, so\n"
-            "scan-order partitions inherit all-whale regions. OCR stage per-\n"
-            "task times at local[8] under three pre-stage partitionings:\n\n"
-            "| partitioning | tasks | stage wall s | median task s | max task s "
-            "| straggler ratio | task-time CV |\n|---|---|---|---|---|---|---|\n"
-            + mode_rows +
-            f"\nFull-extraction 2->8 ladder on the skewed corpus: "
+            "scan-order partitions would inherit all-whale regions. The OCR\n"
+            "stage's per-task balance is perfbench's ocr_stage.straggler_ratio\n"
+            "and ocr_stage.task_cv.\n\n"
+            f"Full-extraction 2->8 ladder on the skewed corpus: "
             f"{lo['docs_per_sec']} -> {hi['docs_per_sec']} docs/s, efficiency "
-            f"**{eff}** (target >= 0.8: {'PASS' if eff >= 0.8 else 'FAIL'}).\n"
+            f"**{eff}** (target >= 0.8: {'PASS' if ladder['pass'] else 'FAIL'}).\n"
         )
     return 0
 
 
 def main() -> int:
-    if len(sys.argv) > 1 and sys.argv[1] == "--measure":
-        print(json.dumps(measure(int(sys.argv[2]), sys.argv[3])))
-        return 0
-    if len(sys.argv) > 1 and sys.argv[1] == "--measure-skew":
-        print(json.dumps(measure_skew(int(sys.argv[2]), sys.argv[3], sys.argv[4])))
+    args = sys.argv[1:]
+    if args[:1] == ["--measure"]:
+        print(json.dumps(measure(int(args[1]), args[2])))
         return 0
 
-    n_docs = 20000
-    if "--docs" in sys.argv:
-        n_docs = int(sys.argv[sys.argv.index("--docs") + 1])
-    if "--skew" in sys.argv:
-        return run_skew_suite(n_docs if "--docs" in sys.argv else 10000)
+    skew = "--skew" in args
+    n_docs = int(args[args.index("--docs") + 1]) if "--docs" in args else (10000 if skew else 20000)
+    if skew:
+        return run_skew_suite(n_docs)
     corpus = ensure_corpus(n_docs)
-
-    def measure_subproc(cpus: int) -> dict:
-        out = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--measure", str(cpus), corpus],
-            capture_output=True, text=True, check=True,
-        )
-        r = json.loads(out.stdout.strip().splitlines()[-1])
-        print(r, file=sys.stderr)
-        return r
-
-    def run_ladder(n: int, n4: int) -> dict:
-        # interleave the two levels across two fresh-JVM passes and keep
-        # each level's best: this VM shows multi-second noise that drifts
-        # over minutes, which a single paired run would bake into the ratio
-        results = {n: [], n4: []}
-        for _ in range(2):
-            for cpus in (n, n4):
-                results[cpus].append(measure_subproc(cpus))
-        lo = min(results[n], key=lambda r: r["wall_s"])
-        hi = min(results[n4], key=lambda r: r["wall_s"])
-        eff = round(hi["docs_per_sec"] / lo["docs_per_sec"] / 4, 3)
-        return {"n": lo, "n4": hi, "efficiency": eff, "pass": eff >= 0.8}
 
     # A local[P] python-UDF job busies up to 2P cores (P JVM task threads
     # pipelined with P Python workers), so on this 32-core box:
@@ -276,7 +150,7 @@ def main() -> int:
     #   local[8] -> local[32]  busies 16 -> 64 threads: oversubscribed
     # The primary ladder is the unsaturated one — the faithful stand-in for
     # N -> 4N executors, which on a real cluster never oversubscribe hosts.
-    ladders = {name: run_ladder(a, b) for name, (a, b) in
+    ladders = {name: run_ladder(corpus, a, b) for name, (a, b) in
                [("2_8", (2, 8)), ("4_16", (4, 16)), ("8_32", (8, 32))]}
     primary = ladders["2_8"]
     summary = {
@@ -289,7 +163,7 @@ def main() -> int:
     }
     print(json.dumps(summary))
 
-    os.makedirs("BENCH", exist_ok=True)
+    os.makedirs(os.path.dirname(BASELINE_MD), exist_ok=True)
     rows = "".join(
         f"| local[{k.split('_')[0]}] -> local[{k.split('_')[1]}] "
         f"| {v['n']['wall_s']} | {v['n']['docs_per_sec']} "
@@ -301,7 +175,7 @@ def main() -> int:
     with open(BASELINE_MD, "w") as f:
         f.write(
             "# BENCH baseline — scaling evidence (north_rule)\n\n"
-            "Identical extraction job (read -> explode -> route -> salted\n"
+            "Identical extraction job (read -> explode -> route -> hash\n"
             "repartition -> mapInArrow OCR -> stitch -> noop sink) on the\n"
             f"identical deterministic corpus (seed 42, {n_docs} docs), at three\n"
             "N -> 4N parallelism ladders — the sandbox stand-in for N -> 4N\n"

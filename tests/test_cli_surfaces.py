@@ -46,3 +46,27 @@ def test_tokenize_cli(tmp_path):
     assert stats["merges"] == 8 and stats["docs"] > 0 and stats["total_tokens"] > 0
     merges = json.load(open(tmp_path / "tok" / "merges.json"))
     assert len(merges) == 8 and all(len(m) == 2 for m in merges)
+
+
+def test_bench_isolate_prints_min_of_3_and_cleans_up():
+    """`bench.py --isolate` times one query in a fresh session and leaves
+    no per-process scratch dir behind."""
+    import json
+
+    env = {**os.environ, "SPARK_GRAFT_SF_DIR": "/root/testdata/sf0.001",
+           "SPARK_GRAFT_CPUS": "2"}
+    proc = subprocess.Popen(
+        [sys.executable, "bench.py", "--isolate", "vocab_build"],
+        stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True, cwd=REPO, env=env,
+    )
+    try:
+        stdout, stderr = proc.communicate(timeout=600)
+    except subprocess.TimeoutExpired:
+        proc.kill()
+        proc.communicate()
+        raise
+    assert proc.returncode == 0, stderr[-800:]
+    rec = json.loads(stdout.strip().splitlines()[-1])
+    assert rec["query"] == "vocab_build"
+    assert rec["isolated_sec"] > 0 and len(rec["attempts"]) == 3
+    assert not os.path.exists(os.path.join(REPO, ".perfbench_work", "runs", str(proc.pid)))

@@ -54,7 +54,7 @@ def test_recognition_matches_literals_single_process():
 
 
 def test_recognition_matches_literals_distributed(spark):
-    """The same literals through the REAL Spark stage (salted repartition
+    """The same literals through the REAL Spark stage (hash repartition
     + mapInArrow + broadcast weights): distribution must not move a
     single character."""
     from vietnamese_ocr_spark.plans.extract import broadcast_weights, recognize_media_df

@@ -21,8 +21,9 @@ def _formatted_plan(df) -> str:
 
 
 def test_salted_repartition_balances_payload_cost(spark, corpus):
-    """After salting, per-partition payload bytes are balanced: max/mean
-    below 1.5 despite whale docs (north_rule 'skew handled explicitly')."""
+    """After the hash repartition on media_ref, per-partition payload bytes
+    are balanced: max/mean below 1.5 despite whale docs (north_rule 'skew
+    handled explicitly')."""
     media = spark.read.parquet(corpus["media"]).select("media_ref", "size_b")
     n = 8
     balanced = salted_repartition(media, n)

@@ -15,21 +15,15 @@ from pyspark.sql import SparkSession
 # 1024 rows per Arrow batch amortize JVM<->Python serialization turns
 # (measured ~15% faster than 256 on the map-only OCR stage; reference batch
 # sizes are 32-200, src/utils/inference.py:44, trainer.py:177). The batch
-# size no longer sets the worker's working set: model/pipeline.py streams
+# size does not set the worker's working set: model/pipeline.py streams
 # payloads and holds at most 32 decoded 64x256 canvases (16 KiB each).
 # Measured on the extract_media benchmark (local[4], 4-core VM): peak RSS
-# per Python worker ~99 MB, most of it imported code (424 modules); it was
-# ~108 MB while every JPEG Huffman table a worker met stayed cached as
-# 65536 separate ints (~2.5 MB a table), ~147 MB while the stage was
-# a pandas UDF and its workers imported pandas (761 modules), ~163 MB when
-# every canvas of a batch was also held until recognition. The
+# per Python worker ~99 MB, most of it imported code (424 modules). The
 # Python-level allocations of one 1024-payload batch peak at ~2.5 MiB,
 # more when it carries a large multi-line image, whose decoded frame
-# dominates. The curation stages (dedup signatures, the LM bigram pass)
-# run through mapInArrow too: on the curate_queries benchmark (local[3]) a
-# worker peaks at ~114 MB, ~140 MB while they were pandas UDFs. Every
-# other batch Python stage is mapInArrow (or applyInArrow) as well; only
-# the two streaming dedup stages still run pandas UDFs.
+# dominates. On the curate_queries benchmark (local[3]) a curation worker
+# peaks at ~114 MB. Every batch Python stage is mapInArrow (or
+# applyInArrow); only the two streaming dedup stages run pandas UDFs.
 ARROW_MAX_RECORDS = 1024
 
 

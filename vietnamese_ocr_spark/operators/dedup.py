@@ -27,11 +27,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# internal persists register with the shared scoped registry
-# (vietnamese_ocr_spark/caching.py); release_persisted is re-exported
-# for consumers that think in dedup terms
-from ..caching import persist_tracked as _persist_tracked  # noqa: E402
-from ..caching import release_persisted  # noqa: E402,F401
+from ..caching import persist_tracked
 from .arrow_batch import BINARY_LIST, arrow_column, column, string_column, take
 
 
@@ -290,7 +286,7 @@ def jaccard_candidates(
     #     md5-as-identity is this module's exact-dedup convention, see
     #     exact_dedup_stats). Nothing downstream needs the text.
     #   * per-doc sizes are size(sarr) — a projection, not a groupBy.
-    sh_docs = _persist_tracked(shingle_digest_docs(docs, shingle_n))
+    sh_docs = persist_tracked(shingle_digest_docs(docs, shingle_n))
     # persist: four subtrees consume the shingle sets (sizes, hot-shingle
     # df, both join sides); without it Spark re-runs the shingle
     # transform 4x. Tracked for release_persisted() so long sessions
@@ -482,7 +478,7 @@ def minhash_candidate_pairs(
         )
         for j in range(n_bands)
     ]
-    bands = _persist_tracked(
+    bands = persist_tracked(
         sig.select("doc_id", F.posexplode(F.array(*keys)).alias("band", "h"))
     )  # consumed by the hot-bucket scan and both join sides
     if max_bucket_size is not None:
@@ -533,7 +529,7 @@ def verify_jaccard_pairs(
     # arrays are md5 digests (16 bytes/shingle), so a pair row carries
     # ~2 x set-size x 16B, and |pairs| after banding is the true
     # near-dup mass, tiny next to the corpus.
-    sh_docs = _persist_tracked(
+    sh_docs = persist_tracked(
         shingle_digest_docs(docs.join(cand_docs, "doc_id", "left_semi"), shingle_n)
     )  # consumed by both pair sides
     a = sh_docs.select(F.col("doc_id").alias("da"), F.col("sarr").alias("_sa"))
@@ -571,7 +567,7 @@ def minhash_dedup_pipeline(
     # pairs are tiny (the true near-dup mass) but their band self-join
     # is consumed three times downstream (cand_docs, the verify join,
     # the components edge list) — persist so it runs once
-    pairs = _persist_tracked(
+    pairs = persist_tracked(
         minhash_candidate_pairs(docs, k, rows_per_band, shingle_n, max_bucket_size)
     )
     verified = verify_jaccard_pairs(docs, pairs, shingle_n, threshold)

@@ -32,8 +32,7 @@ from collections.abc import Iterator
 import numpy as np
 import pyarrow as pa
 from pyspark import TaskContext
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 from ..model.pipeline import recognize_png_batch
 from ..model.recognizer import Recognizer, weights_from_bytes
@@ -119,34 +118,11 @@ def make_ocr_stage(weights_bc):
     return ocr_stage
 
 
-def size_bucket(col: Column, bucket_bytes: int = 4096) -> Column:
-    """Coarse payload-size bucket used as the salting dimension."""
-    return (col / F.lit(bucket_bytes)).cast("int")
+def salted_repartition(df: DataFrame, n_partitions: int) -> DataFrame:
+    """Skew-defeating repartition before the OCR stage (north_rule; X-skew):
+    a hash on media_ref, so whale docs' payloads scatter across partitions
+    instead of landing together in scan order. AQE's skew handling only
+    rebalances join shuffles, never a UDF stage's input.
 
-
-def salted_repartition(df: DataFrame, n_partitions: int, weight_col: str = "size_b",
-                       salts_per_bucket: int | None = None) -> DataFrame:
-    """Skew-defeating repartition before the OCR stage (north_rule; X-skew).
-
-    AQE's skew-join handling only rebalances *join* shuffles — a UDF stage
-    fed by a skewed key distribution still stalls on its whale partitions.
-    We shuffle on (size_bucket, salt) so same-cost rows spread uniformly:
-    every partition receives a similar mix of cheap and expensive images,
-    which keeps the mapInArrow stage's task times flat (SURVEY.md §4).
-
-    The salt space MUST comfortably exceed the partition count: payload
-    sizes cluster into very few buckets, so (bucket x salt) is the real key
-    cardinality — with only ~8 salts most partitions receive zero rows
-    (measured: median task 0 rows, max 4.8k). Hash partitioning places
-    whole (bucket, salt) CELLS binomially, so per-partition row-count
-    variance ~ 1/sqrt(cells per partition): with one dominant size bucket
-    the round-3 64x multiplier left ~12% count spread at 8 partitions
-    (measured in the round-4 skew probe); 512x pushes it under ~4% while
-    the shuffle key stays tiny.
-    """
-    if salts_per_bucket is None:
-        salts_per_bucket = n_partitions * 512
-    salted = df.withColumn("_bucket", size_bucket(F.col(weight_col))).withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col("media_ref")), F.lit(salts_per_bucket))
-    )
-    return salted.repartition(n_partitions, "_bucket", "_salt").drop("_bucket", "_salt")
+    The name predates the hash key; the benchmark imports it by this name."""
+    return df.repartition(n_partitions, "media_ref")

@@ -16,6 +16,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..caching import persist_tracked
 from .arrow_batch import string_column, take
 
 
@@ -223,7 +224,7 @@ def lm_bigram_score(docs: DataFrame) -> DataFrame:
     The persisted bigram frame outlives this call: callers must run
     `caching.release_persisted()` once they have consumed the result,
     or a long session accumulates its cached blocks."""
-    from .dedup import _persist_tracked, _spread
+    from .dedup import _spread
 
     docs = _spread(docs)
     w = docs.select("doc_id", F.split("text", " ").alias("ws"))
@@ -254,7 +255,7 @@ def lm_bigram_score(docs: DataFrame) -> DataFrame:
                 names=["doc_id", "s", "w1"],
             )
 
-    bi = _persist_tracked(docs.select("doc_id", "text").mapInArrow(gen, bi_schema))
+    bi = persist_tracked(docs.select("doc_id", "text").mapInArrow(gen, bi_schema))
     bc = bi.groupBy("s").agg(F.count("*").alias("c12"))
     terms = (
         bi.join(bc, "s")

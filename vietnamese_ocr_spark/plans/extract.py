@@ -6,7 +6,7 @@ Logical plan, all declarative so Catalyst prunes/pushes/reorders freely
   documents ──explode_outer(spans)─┬─ text/empty ── normalize (JVM regexp) ─┐
                                    └─ kind='media' ─ distinct media_ref     │
                                           │  ⋈ media (pruned cols)          │
-                                          │  salted repartition(size,salt)  │
+                                          │  repartition(hash media_ref)    │
                                           │  mapInArrow OCR ─── 'a' fallback│
                                           └─ join back to media spans ──────┤
                                                                  unionByName
@@ -57,7 +57,8 @@ def broadcast_weights(spark: SparkSession, encoder: str = DEFAULT_ENCODER):
 
 def recognize_media_df(media: DataFrame, weights_bc, n_partitions: int | None = None) -> DataFrame:
     """media(media_ref, png, size_b) -> (media_ref, rec_text, conf_hist,
-    n_tokens, part_id); salted repartition feeds the one OCR stage."""
+    n_tokens, part_id); a hash repartition on media_ref feeds the one OCR
+    stage."""
     spark = media.sparkSession
     if n_partitions is None:
         n_partitions = int(spark.conf.get("spark.sql.shuffle.partitions"))

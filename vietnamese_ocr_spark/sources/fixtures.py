@@ -96,7 +96,7 @@ def generate_corpus(
     Deterministic in (n_docs, seed, whale knobs); the defaults reproduce
     the committed golden corpus byte-for-byte. `whale_frac`/`whale_spans`
     shape the skew tail — bench_scaling.py --skew uses (0.01, (100, 151))
-    to build the 1%-of-docs-carry-~100x-media corpus the salting proof
+    to build the 1%-of-docs-carry-~100x-media corpus its skewed ladder
     runs on.
 
     Injected edge cases (FIXTURES.md §1):

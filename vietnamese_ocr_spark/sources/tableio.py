@@ -5,8 +5,8 @@ provides the same *interface* an Iceberg catalog would (SURVEY.md §7
 resolved decisions): append-only writes, a monotonically increasing
 snapshot id, committed-work tracking for resume, and an append-only metrics
 (lineage) table. If the Iceberg runtime is ever on the classpath,
-`iceberg_available()` flips and `write_table`/`read_table` can be pointed
-at `format("iceberg")` without touching the pipeline code.
+`ExtractTable.append_extracted`/`read_snapshot` can be pointed at
+`format("iceberg")` without touching the pipeline code.
 """
 
 from __future__ import annotations
@@ -19,16 +19,6 @@ import uuid
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-
-
-def iceberg_available(spark: SparkSession) -> bool:
-    try:
-        spark._jvm.java.lang.Class.forName(  # noqa: SLF001
-            "org.apache.iceberg.spark.source.SparkTable"
-        )
-        return True
-    except Exception:
-        return False
 
 
 class ConcurrentCommitError(RuntimeError):

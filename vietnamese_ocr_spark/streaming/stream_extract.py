@@ -6,7 +6,7 @@ committing extracted spans + lineage per micro-batch — at-least-once
 resume on top of the batch pipeline's idempotent anti-join semantics.
 
 Shape: readStream(documents dir) -> foreachBatch(extract + append + commit).
-The OCR mapInArrow stage, salting, and stitch are literally the batch
+The OCR mapInArrow stage, its repartition, and stitch are literally the batch
 operators — Structured Streaming replays unprocessed files after a crash,
 and the committed-doc anti-join inside run dedupes any overlap, giving
 effective exactly-once on doc_ids.
