@@ -36,6 +36,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
 import signal
 import subprocess
@@ -166,8 +167,16 @@ def time_flagship(spark, corpus_dir: str, weights_bc, limit: int | None = None) 
     return wall
 
 
+def scale_factor(sf_dir: str) -> float | None:
+    """The scale factor named in a testdata path (`.../sf0.1` -> 0.1);
+    None for a path that names none, so the JSON line keeps its "sf" key."""
+    m = re.search(r"sf([0-9]+(?:\.[0-9]+)?)", sf_dir)
+    return float(m.group(1)) if m else None
+
+
 def main(isolate: str | None = None) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    sf = scale_factor(sf_dir)
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     import __spark_entry__ as entrymod
@@ -239,7 +248,6 @@ def main(isolate: str | None = None) -> int:
                 print(f"# isolate {name} failed: {ex}", file=sys.stderr)
 
     total = round(sum(timings.values()), 3)
-    sf = sf_dir.rstrip("/").split("sf")[-1]
     print(
         json.dumps(
             {
@@ -247,7 +255,7 @@ def main(isolate: str | None = None) -> int:
                 "value": total,
                 "unit": "sec",
                 "queries": timings,
-                "sf": float(sf),
+                "sf": sf,
                 "extra": {
                     "ocr_docs_per_sec": round(n_docs / timings["ocr_extract"], 2),
                     "cpus": cpus,

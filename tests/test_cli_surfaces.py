@@ -70,3 +70,20 @@ def test_bench_isolate_prints_min_of_3_and_cleans_up():
     assert rec["query"] == "vocab_build"
     assert rec["isolated_sec"] > 0 and len(rec["attempts"]) == 3
     assert not os.path.exists(os.path.join(REPO, ".perfbench_work", "runs", str(proc.pid)))
+
+
+def test_bench_scale_factor_parses_sf_paths_and_nulls_others():
+    """The "sf" key is parsed from the testdata path before the suite
+    runs; a path naming no scale factor (bench_scaleup.py's scratch
+    corpus) gives null instead of failing after the whole suite."""
+    import json
+
+    paths = ["/root/testdata/sf0.1", "/data/sf0.01/", "/tmp/vos_scaleup_10x"]
+    out = subprocess.run(
+        [sys.executable, "-c",
+         "import json, sys, bench; "
+         "print(json.dumps([bench.scale_factor(p) for p in sys.argv[1:]]))",
+         *paths],
+        capture_output=True, text=True, check=True, cwd=REPO,
+    )
+    assert json.loads(out.stdout) == [0.1, 0.01, None]

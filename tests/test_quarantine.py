@@ -62,3 +62,21 @@ def test_lineage_records_decode_failures(spark):
     lin = lineage_df(rec, "run", 1)
     total_failures = sum(r["decode_failures"] for r in lin.collect())
     assert total_failures == 1
+
+    # every lineage column equals a plain-Python fold of rec per part_id
+    want: dict[int, list] = {}
+    for r in rec.collect():
+        acc = want.setdefault(r["part_id"], [0, 0, 0, [0] * len(r["conf_hist"])])
+        acc[0] += 1
+        acc[1] += r["n_tokens"]
+        acc[2] += 0 if r["decode_ok"] else 1
+        acc[3] = [a + b for a, b in zip(acc[3], r["conf_hist"])]
+    assert sorted(tuple(r) for r in lin.collect()) == sorted(
+        (p, n, tok, fail, hist, "run", 1)
+        for p, (n, tok, fail, hist) in want.items()
+    )
+    assert lin.schema.simpleString() == (
+        "struct<part_id:int,media_count:bigint,token_count:bigint,"
+        "decode_failures:bigint,conf_histogram:array<bigint>,"
+        "run_id:string,snapshot_id:int>"
+    )

@@ -3,9 +3,11 @@
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 
+from vietnamese_ocr_spark import caching
 from vietnamese_ocr_spark.streaming.stream_extract import stream_extract
 
 
@@ -19,6 +21,8 @@ def test_stream_extract_matches_oracle(spark, corpus, golden, tmp_path):
         shutil.copy(p, os.path.join(stream_dir, f"batch-{i:04d}.parquet"))
 
     out = str(tmp_path / "stream_out")
+    caching.release_persisted()  # frames earlier tests left tracked
+    rdds_before = spark.sparkContext._jsc.getPersistentRDDs().size()
     q = stream_extract(
         spark, stream_dir, corpus["media"], out,
         checkpoint_dir=str(tmp_path / "ckpt"), max_files_per_trigger=1,
@@ -27,6 +31,9 @@ def test_stream_extract_matches_oracle(spark, corpus, golden, tmp_path):
         q.processAllAvailable()
     finally:
         q.stop()
+    # every micro-batch released what it cached: no frame or RDD per epoch
+    assert caching._TRACKED == []
+    assert spark.sparkContext._jsc.getPersistentRDDs().size() == rdds_before
 
     rows = spark.read.option("recursiveFileLookup", "true").parquet(out + "/extracted").collect()
     got = {
@@ -37,6 +44,13 @@ def test_stream_extract_matches_oracle(spark, corpus, golden, tmp_path):
     # lineage was committed per epoch
     lin = spark.read.parquet(out + "/lineage")
     assert lin.count() >= 1
+    # micro-batches commit the batch path's manifest entries
+    with open(os.path.join(out, "manifest.json")) as f:
+        snaps = json.load(f)["snapshots"]
+    assert snaps and all(
+        "media_recognized_this_run" in snap and "data_files" in snap
+        for snap in snaps
+    )
 
 
 def test_stream_extract_restart_resumes_without_duplicates(

@@ -21,7 +21,7 @@ import numpy as np
 
 from ..functions.imaging import decode_image, preprocess
 from .detector import detect_line_bands, tighten_band
-from .recognizer import Recognizer
+from .recognizer import CONF_BUCKETS, Recognizer
 
 MODEL_BATCH = 32  # reference inference batch, src/utils/inference.py:44
 
@@ -29,9 +29,10 @@ MODEL_BATCH = 32  # reference inference batch, src/utils/inference.py:44
 def recognize_png_batch(
     pngs: list[bytes], recognizer: Recognizer
 ) -> tuple[list[str], np.ndarray, list[bool]]:
-    """Returns (text per payload — lines joined with newline, payload x 10
-    confidence histograms, decode_ok flags). Empty strings stay empty
-    ('a' fallback is a pipeline projection, src/utils/inference.py:108-110).
+    """Returns (text per payload — lines joined with newline, payload x
+    CONF_BUCKETS confidence histograms, decode_ok flags). Empty strings
+    stay empty ('a' fallback is a pipeline projection,
+    src/utils/inference.py:108-110).
 
     Corrupt payloads are QUARANTINED, not fatal: at 10^12 rows a single
     bad byte must never kill the job (the single-process reference would
@@ -40,7 +41,7 @@ def recognize_png_batch(
     the decode budget (functions/budget.py) fail the same way."""
     ok = [True] * len(pngs)
     lines: list[list[str]] = [[] for _ in pngs]
-    hist = np.zeros((len(pngs), 10), dtype=np.int64)
+    hist = np.zeros((len(pngs), CONF_BUCKETS), dtype=np.int64)
     owners: list[int] = []
     canvases: list[np.ndarray] = []
 

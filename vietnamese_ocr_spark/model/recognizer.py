@@ -47,6 +47,7 @@ INK_COL_THRESH = 0.05    # mean column brightness marking "ink present"
 EOS_INK_THRESH = 0.08    # strip mean below this => end-of-line
 EOS_GAIN = 12.0
 SOFTMAX_TEMP = 4.0
+CONF_BUCKETS = 10        # width of the per-token confidence histogram
 _EPS = 1e-12
 
 
@@ -137,7 +138,8 @@ class Recognizer:
         return logits
 
     def greedy_decode(self, batch: np.ndarray) -> tuple[list[list[int]], np.ndarray]:
-        """Vectorized M11: returns (token ids per row, B x 10 conf histograms).
+        """Vectorized M11: returns (token ids per row, B x CONF_BUCKETS
+        conf histograms).
 
         Active-mask loop mirrors the reference's dict-shrinking batch
         (src/model/model.py:211-216): rows leave on <eos>; at step 32 the
@@ -146,7 +148,7 @@ class Recognizer:
         strips, inv_norm, ink = self.encode(batch)
         b = batch.shape[0]
         tokens: list[list[int]] = [[] for _ in range(b)]
-        hist = np.zeros((b, 10), dtype=np.int64)
+        hist = np.zeros((b, CONF_BUCKETS), dtype=np.int64)
         active = np.ones(b, dtype=bool)
         for t in range(MAX_TOKENS):
             if not active.any():
@@ -160,7 +162,9 @@ class Recognizer:
             z = z - z.max(axis=1, keepdims=True)
             p = np.exp(z)
             conf = p[np.arange(len(idx)), choice] / p.sum(axis=1)
-            bucket = np.minimum((conf * 10).astype(np.int64), 9)
+            bucket = np.minimum(
+                (conf * CONF_BUCKETS).astype(np.int64), CONF_BUCKETS - 1
+            )
             is_eos = choice == EOS
             np.add.at(hist, (idx[~is_eos], bucket[~is_eos]), 1)
             active[idx[is_eos]] = False

@@ -35,14 +35,10 @@ from pyspark.sql import functions as F
 
 from ..caching import persist_tracked, release_persisted
 from ..functions.text import normalize_text, with_empty_fallback
-from ..model.recognizer import weights_to_bytes
+from ..model.recognizer import CONF_BUCKETS, weights_to_bytes
 from ..model.registry import DEFAULT_ENCODER, build_weights_variant
 from ..operators.ocr_stage import OCR_OUTPUT_SCHEMA, make_ocr_stage, salted_repartition
 from ..sources.tableio import ExtractTable
-
-EXTRACTED_SPAN_TYPE = (
-    "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-)
 
 
 def broadcast_weights(spark: SparkSession, encoder: str = DEFAULT_ENCODER):
@@ -169,29 +165,21 @@ def extract_df(
 
 def lineage_df(rec: DataFrame, run_id: str, snapshot_id: int) -> DataFrame:
     """Per-partition commit metrics (north_rule: row counts + confidence
-    histograms + lineage ids). Element-wise histogram sum via posexplode —
-    a narrow shuffle keyed on (part_id, bucket), never touching payloads."""
-    per_bucket = (
-        rec.select("part_id", F.posexplode("conf_hist").alias("bucket", "n"))
-        .groupBy("part_id", "bucket")
-        .agg(F.sum("n").alias("n"))
-    )
-    hist = (
-        per_bucket.groupBy("part_id")
-        .agg(
-            F.array_sort(F.collect_list(F.struct("bucket", "n"))).alias("_h"),
-        )
-        .select("part_id", F.transform("_h", lambda s: s["n"]).alias("conf_histogram"))
-    )
-    counts = rec.groupBy("part_id").agg(
-        F.count("*").alias("media_count"),
-        F.sum("n_tokens").alias("token_count"),
-        F.sum(F.when(~F.col("decode_ok"), 1).otherwise(0))
-        .cast("long")
-        .alias("decode_failures"),
-    )
+    histograms + lineage ids). One aggregation keyed on part_id: the
+    histogram is an element-wise sum, one partial sum per bucket on the
+    map side, never touching payloads."""
     return (
-        counts.join(hist, "part_id")
+        rec.groupBy("part_id")
+        .agg(
+            F.count("*").alias("media_count"),
+            F.sum("n_tokens").alias("token_count"),
+            F.sum(F.when(~F.col("decode_ok"), 1).otherwise(0))
+            .cast("long")
+            .alias("decode_failures"),
+            F.array(
+                *[F.sum(F.col("conf_hist")[i]) for i in range(CONF_BUCKETS)]
+            ).alias("conf_histogram"),
+        )
         .withColumn("run_id", F.lit(run_id))
         .withColumn("snapshot_id", F.lit(snapshot_id))
     )
@@ -233,7 +221,8 @@ def run_extract_frames(
     """Full job: extract -> append extracted+lineage -> commit.
 
     Takes DataFrames, so any source feeds it: parquet/Iceberg tables, a
-    binaryFile image directory (sources/image_folder.py), a stream batch.
+    binaryFile image directory (sources/image_folder.py), and each
+    micro-batch of streaming/stream_extract.py.
     Resumable: a re-run after a partial failure anti-joins the already
     committed doc_ids and only processes the remainder; re-running a
     complete output is a no-op commit.
@@ -272,7 +261,7 @@ def run_extract_frames(
         # must never leave lineage rows carrying a snapshot_id it didn't
         # commit (the winner would reuse that id, corrupting attribution)
         table.append_lineage(lineage_df(rec, run_id, committed))
-        n_docs = table.read_snapshot(spark, committed).select("doc_id").count()
+        n_docs = table.snapshot_rows(committed)
     finally:
         rec.unpersist()
         # scoped release of the span_cols projection persisted inside

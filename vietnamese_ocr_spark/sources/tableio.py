@@ -18,6 +18,7 @@ import time
 import uuid
 from contextlib import contextmanager
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -196,6 +197,14 @@ class ExtractTable:
         if merge_schema:
             reader = reader.option("mergeSchema", "true")
         return reader.parquet(*files)
+
+    def snapshot_rows(self, snapshot_id: int | None = None) -> int:
+        """Rows visible at `snapshot_id` (default: head), summed from the
+        committed files' parquet footers: the count the writer already
+        holds, so no Spark job and no scan of the table."""
+        return sum(
+            pq.read_metadata(p).num_rows for p in self._files_as_of(snapshot_id)
+        )
 
     def append_lineage(self, df: DataFrame) -> None:
         df.write.mode("append").parquet(self.lineage_dir)
