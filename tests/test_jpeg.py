@@ -6,6 +6,7 @@ real JPEG round-trip."""
 
 from __future__ import annotations
 
+import platform
 import struct
 
 import numpy as np
@@ -185,7 +186,10 @@ def _pinned_fixtures() -> dict[str, bytes]:
 def test_decodes_are_pinned_byte_equal():
     """sha256 prefixes of the decoded pixels, taken from the decoder that
     kept int64 coefficients and numpy-built Huffman tables: the int16
-    stores and the slice-built tables change no output byte."""
+    stores and the slice-built tables change no output byte.
+    progressive_420's pin decodes the coefficients of an exact calculation
+    (60-digit orthonormal DCT-II, 13 exact ties rounded half to even); the
+    int64 decoder gives the same hash for those bytes."""
     import hashlib
 
     want = {
@@ -194,11 +198,72 @@ def test_decodes_are_pinned_byte_equal():
         "baseline_420": "d95b80cbf1663916",
         "restart_markers": "d95b80cbf1663916",
         "progressive_gray": "2420399530feb7b7",
-        "progressive_420": "81623eddad4032b8",
+        "progressive_420": "e7338b1f49a41e08",
     }
     got = {name: hashlib.sha256(jpeg_decode(data).tobytes()).hexdigest()[:16]
            for name, data in _pinned_fixtures().items()}
     assert got == want
+
+
+def test_flat_block_ties_round_half_to_even():
+    """A flat block's only nonzero coefficient is its DC, exactly
+    8 * (v - 128) / step, and it ties often (a white block at quality 50:
+    1016 / 16 = 63.5). Every DC rounds half to even, as Python's round
+    does a Fraction, whatever BLAS kernel ran the DCT."""
+    from fractions import Fraction
+
+    plane = np.repeat(np.arange(256, dtype=np.uint8), 8)[None, :].repeat(8, axis=0)
+    for quality in range(1, 101):
+        qtab = jpeg._quality_table(jpeg._Q_LUMA, quality)
+        zz, _bh, _bw = jpeg._quantize_plane(plane, qtab)
+        want = [round(Fraction(8 * (v - 128), int(qtab[0]))) for v in range(256)]
+        assert zz[:, 0].tolist() == want, quality
+        assert not zz[:, 1:].any(), quality
+
+
+def _openblas_dynamic_arch() -> bool:
+    """numpy's BLAS is OpenBLAS built to pick its kernel at run time, the
+    build in which OPENBLAS_CORETYPE selects the kernel."""
+    try:
+        blas = np.show_config(mode="dicts")["Build Dependencies"]["blas"]
+    except (TypeError, KeyError):  # numpy < 1.25 has no mode="dicts"
+        return False
+    return ("openblas" in str(blas.get("name", "")).lower()
+            and "DYNAMIC_ARCH=1" in str(blas.get("openblas configuration", "")))
+
+
+_ENCODE_FIXTURES = """
+import hashlib, json, sys
+sys.path[:0] = sys.argv[1:3]
+from test_jpeg import _pinned_fixtures
+print(json.dumps({k: hashlib.sha256(v).hexdigest() for k, v in _pinned_fixtures().items()}))
+"""
+
+
+@pytest.mark.skipif(platform.machine() not in ("x86_64", "AMD64")
+                    or not _openblas_dynamic_arch(),
+                    reason="needs x86-64 numpy on a DYNAMIC_ARCH OpenBLAS")
+def test_encoded_bytes_do_not_depend_on_the_blas_kernel():
+    """The pinned fixtures encode to the same bytes under the non-FMA
+    Prescott kernel as under the kernel OpenBLAS picks for this CPU."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    here = os.path.dirname(os.path.abspath(__file__))
+    hashes = []
+    for coretype in ("Prescott", None):
+        env = {k: v for k, v in os.environ.items() if k != "OPENBLAS_CORETYPE"}
+        if coretype:
+            env["OPENBLAS_CORETYPE"] = coretype
+        proc = subprocess.run(
+            [sys.executable, "-c", _ENCODE_FIXTURES, os.path.dirname(here), here],
+            capture_output=True, text=True, env=env, timeout=300,
+        )
+        assert proc.returncode == 0, proc.stderr[-2000:]
+        hashes.append(json.loads(proc.stdout))
+    assert hashes[0] == hashes[1]
 
 
 _TABLES = {

@@ -11,7 +11,10 @@ Scope (ITU-T T.81 Huffman-coded DCT, JFIF container):
   encode: 8-bit grayscale or RGB; 4:4:4 or 4:2:0 chroma subsampling;
           Annex K quantization tables with libjpeg-style quality scaling;
           Annex K standard Huffman tables (no per-image optimization);
-          baseline, or progressive with a fixed scan script.
+          baseline, or progressive with a fixed scan script. Each
+          coefficient is its exact DCT value / step rounded half to even
+          (np.round's rule), so the encoded bytes are a function of the
+          input alone, whatever BLAS kernel runs the matmuls.
   decode: baseline (SOF0/SOF1) and progressive (SOF2: spectral selection
           + successive approximation), 1 or 3 components, any (h,v)
           sampling factors up to 2x2, multiple DQT/DHT segments, restart
@@ -183,12 +186,28 @@ def _from_blocks(blocks: np.ndarray, bh: int, bw: int) -> np.ndarray:
     )
 
 
+# A quantized coefficient whose exact value is a half-integer (a tie; a
+# flat white block at quality 50 has DC 1016/16 = 63.5) comes out of the
+# float64 DCT a few ulps to one side of it, and which side depends on the
+# BLAS kernel (FMA or not). Values this close to a tie snap onto it before
+# np.round, so ties round half to even on every host. Bound: 8-bit samples
+# give |coef| <= 1024, and two 8-term dot products (~8 * 2**-53 * 1024 *
+# sum|C| each) plus the rounding of _C and of the divide stay within about
+# 4e-12 of the exact value; the largest difference between the Prescott
+# and Haswell OpenBLAS kernels over the test fixtures and every flat block
+# is 3.4e-13. Every value from 1e-11 to 1e-6 gives the same bytes there.
+_TIE_TOL = 1e-9
+
+
 def _quantize_plane(plane: np.ndarray, qtab: np.ndarray) -> tuple[np.ndarray, int, int]:
-    """plane (uint8) -> zigzagged quantized coefficients (n_blocks, 64)."""
+    """plane (uint8) -> zigzagged quantized coefficients (n_blocks, 64),
+    each the exact DCT value / step rounded half to even."""
     blocks, bh, bw = _to_blocks(plane)
     coef = _C @ (blocks.astype(np.float64) - 128.0) @ _C.T
-    q = np.round(coef.reshape(-1, 64) / qtab[None, :].astype(np.float64))
-    return q.astype(np.int64)[:, ZZ], bh, bw
+    v = coef.reshape(-1, 64) / qtab[None, :].astype(np.float64)
+    lo = np.floor(v)
+    v = np.where(np.abs(v - lo - 0.5) < _TIE_TOL, lo + 0.5, v)
+    return np.round(v).astype(np.int64)[:, ZZ], bh, bw
 
 
 def _dequantize_plane(zzcoef: np.ndarray, qtab: np.ndarray, bh: int, bw: int) -> np.ndarray:
